@@ -123,9 +123,8 @@ def q_seen_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     seen = frontier.filter(F.col("event_type").isin("click", "view")).select(
         "fp", "url", "host_hash"
     )
-    empty_bloom = spark.createDataFrame([], seen_ops.BLOOM_SCHEMA)
-    bloom = seen_ops.update_blooms(empty_bloom, seen)
-    out = seen_ops.filter_unseen(frontier, seen.select("fp", "url"), bloom)
+    bitmaps = {hh: bytes(b) for hh, b in seen_ops.build_blooms(seen).collect()}
+    out = seen_ops.filter_unseen(frontier, seen, bloom_bitmaps=bitmaps, spark=spark)
     return out.select("event_id", "event_type")
 
 
@@ -1348,9 +1347,8 @@ def entry(spark: SparkSession) -> DataFrame:
     seen = frontier.filter(F.col("event_type").isin("click", "view")).select(
         "fp", "url", "host_hash"
     )
-    empty_bloom = spark.createDataFrame([], seen_ops.BLOOM_SCHEMA)
-    bloom = seen_ops.update_blooms(empty_bloom, seen)
-    unseen = seen_ops.filter_unseen(frontier, seen.select("fp", "url"), bloom)
+    bitmaps = {hh: bytes(b) for hh, b in seen_ops.build_blooms(seen).collect()}
+    unseen = seen_ops.filter_unseen(frontier, seen, bloom_bitmaps=bitmaps, spark=spark)
     robots = (
         frontier.select("host").distinct()
         .withColumn("requests_per_minute", (F.pmod(F.col("host"), F.lit(5)) + 1).cast("double"))

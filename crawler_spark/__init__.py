@@ -5,8 +5,8 @@ A from-scratch re-expression of the semantics of iKoulee/crawler
 as idiomatic Spark DataFrame dataflow over tables of image+caption
 pairs:
 
-- partitioned URL-seen set (exact anti-join + per-host-bucket bloom
-  prefilter) replacing the SQLite ``url UNIQUE`` index
+- partitioned URL-seen set (exact anti-join + broadcast per-host-bucket
+  bloom prefilter) replacing the SQLite ``url UNIQUE`` index
   (reference: src/harvester.py:133-166),
 - per-host politeness tokens as a window-ranked priority queue
   replacing the wall-clock sleep loop (src/harvester.py:420-434),

@@ -129,7 +129,6 @@ class CrawlEngine:
     robots_rules: DataFrame
     keywords: DataFrame
     round_duration: float = 60.0
-    use_bloom: bool = True
     n_salt: int = 8
     store_payload: bool = True
     validate_payload: bool = True
@@ -145,15 +144,6 @@ class CrawlEngine:
     # passes a requests.Session-backed callable here (cookie jar,
     # referer, apparent_encoding re-decode — src/harvester.py:412-442).
     fetch_fn: object = None
-    # "broadcast": bloom bitmaps live on the driver and ship to
-    # executors as a Spark broadcast — the probe UDF touches only
-    # (host_hash, fp). Right whenever the total bitmap size fits a
-    # broadcast (seen.BROADCAST_BLOOM_MAX_BYTES). "cogroup": bitmaps
-    # stay partitioned by host_hash and the probe is a co-partitioned
-    # cogroup — the 10^10-URL path, where blooms are GBs. "cuckoo":
-    # broadcast path with per-bucket cuckoo filters instead of blooms
-    # — same probe cost, plus DELETE for URL expiry / re-crawl.
-    bloom_mode: str = "broadcast"
     # every N rounds, rewrite the append-only tables (seen, bridge,
     # lineage) into one snapshot: each round's append adds a file set,
     # and a month-long crawl would otherwise read thousands of tiny
@@ -262,52 +252,22 @@ class CrawlEngine:
     def current_round(self) -> int:
         return int(self.catalog.properties("frontier").get("round", 0))
 
-    def _sidecar_table(self) -> str:
-        return "seen_cuckoo" if self.bloom_mode == "cuckoo" else "seen_bloom"
-
     def _bitmaps(self) -> dict[int, bytes]:
-        """Driver-held prefilter blobs (bloom bitmaps or serialized
-        cuckoo tables), lazily restored from the catalog snapshot
-        (resume path)."""
+        """Driver-held bloom bitmaps, lazily restored from the catalog
+        snapshot (resume path)."""
         if self._bloom_bitmaps is None:
-            if not self.catalog.exists(self._sidecar_table()):
+            if not self.catalog.exists("seen_bloom"):
                 # fresh bootstrap: no snapshot to restore — skip the
                 # Spark collect (an empty-DF job still costs ~1s of
                 # driver-blocking serial time per run)
                 self._bloom_bitmaps = {}
                 return self._bloom_bitmaps
-            rows = self.catalog.read(
-                self._sidecar_table(), seen_ops.BLOOM_SCHEMA
-            ).collect()
+            rows = self.catalog.read("seen_bloom", seen_ops.BLOOM_SCHEMA).collect()
             self._bloom_bitmaps = {int(r["host_hash"]): bytes(r["bitmap"]) for r in rows}
         return self._bloom_bitmaps
 
-    def _broadcast_fits(self) -> bool:
-        """Auto-fallback guard: the driver-held blob fold + broadcast
-        probe is only used while the sidecar fits
-        seen.BROADCAST_BLOOM_MAX_BYTES; past it (cluster scale: 10^10
-        URLs ≈ GBs of filter), the co-partitioned cogroup path keeps
-        every bucket's blob on its own partition and off the driver.
-
-        When the blobs are not already driver-resident the size check
-        is a Spark aggregate — never a collect of something that might
-        be the very thing that's too big to collect.
-        """
-        if self._bloom_bitmaps is not None:
-            total = sum(len(b) for b in self._bloom_bitmaps.values())
-        elif not self.catalog.exists(self._sidecar_table()):
-            total = 0  # fresh bootstrap: nothing persisted yet
-        else:
-            row = (
-                self.catalog.read(self._sidecar_table(), seen_ops.BLOOM_SCHEMA)
-                .select(F.sum(F.length("bitmap")))
-                .first()
-            )
-            total = int(row[0] or 0)
-        return total <= seen_ops.BROADCAST_BLOOM_MAX_BYTES
-
     def _bloom_broadcast(self):
-        """One live broadcast of the blob dict, reused across rounds and
+        """One live broadcast of the bitmap dict, reused across rounds and
         unpersisted whenever the bitmaps change (a fresh broadcast per
         round would accumulate executor copies unboundedly)."""
         if self._bloom_bc is None:
@@ -320,13 +280,13 @@ class CrawlEngine:
             self._bloom_bc = None
 
     def _snapshot_blobs(self, blobs: dict[int, bytes]) -> None:
-        """Persist driver-resident filter blobs for resume — a pyarrow
-        direct write (the blobs live on the driver already; a Spark
+        """Persist driver-resident bloom bitmaps for resume — a pyarrow
+        direct write (the bitmaps live on the driver already; a Spark
         job for 16 rows is seconds of serial overhead per round)."""
         import pyarrow as pa
 
         self.catalog.overwrite_arrow(
-            self._sidecar_table(),
+            "seen_bloom",
             pa.table(
                 {
                     "host_hash": pa.array(list(blobs), type=pa.int32()),
@@ -336,81 +296,28 @@ class CrawlEngine:
         )
 
     def _commit_bloom(self, new_seen) -> None:
-        """Fold a round's stored fingerprints into the filter sidecar.
+        """Fold a round's stored fingerprints into the bloom sidecar.
 
-        broadcast mode (and cuckoo, while the blobs fit
-        BROADCAST_BLOOM_MAX_BYTES): the per-round insert set is
-        collected (16 B/row) and folded on the driver, then
-        snapshotted for resume. A cuckoo bucket whose fixed capacity
-        overflows is rebuilt from the exact seen table with doubled
-        slots — a silently-failed insert would otherwise turn into a
-        false NEGATIVE, and prefilter negatives bypass the exact
-        anti-join (the one invariant the bypass depends on).
-
-        Past the size cutoff, or in explicit cogroup mode, the fold is
-        a co-partitioned cogroup and the blobs never visit the driver;
-        overflowed cuckoo buckets come back flagged and are rebuilt
-        partition-side from the seen table.
+        The per-round insert set is collected (16 B/row) and folded on
+        the driver, then snapshotted for resume. The sidecar is at most
+        N_HOST_BUCKETS x 16 KiB = 16 MiB, so it always fits the driver
+        and one broadcast.
         """
         import numpy as np
 
-        if self.bloom_mode in ("broadcast", "cuckoo") and self._broadcast_fits():
-            blobs = dict(self._bitmaps())
-            # Arrow transfer + vectorized per-bucket fold: the per-Row
-            # Python loop this replaces cost seconds per round at 10^5
-            # inserts — pure driver serial time that does not shrink
-            # with executors.
-            pdf = new_seen.select("host_hash", "fp").toPandas()
-            if self.bloom_mode == "cuckoo":
-                from crawler_spark.operators.cuckoo import CuckooFilter, build_filter
-
-                for hh, grp in pdf.groupby("host_hash"):
-                    hh = int(hh)
-                    arr = grp["fp"].to_numpy(dtype=np.int64)
-                    cf = (
-                        CuckooFilter.from_bytes(blobs[hh])
-                        if hh in blobs
-                        else CuckooFilter()
-                    )
-                    if cf.insert_many(arr) < len(arr):
-                        all_fps = (
-                            self.seen()
-                            .filter(F.col("host_hash") == hh)
-                            .select("fp")
-                            .toPandas()["fp"]
-                            .to_numpy(dtype=np.int64)
-                        )
-                        cf = build_filter(all_fps, min_slots=cf.n_slots * 2)
-                    blobs[hh] = cf.to_bytes()
-            else:
-                for hh, grp in pdf.groupby("host_hash"):
-                    blobs[int(hh)] = seen_ops.bloom_build(
-                        grp["fp"].to_numpy(dtype=np.int64), blobs.get(int(hh))
-                    )
-            self._bloom_bitmaps = blobs
-            self._invalidate_bloom_broadcast()
-            self._snapshot_blobs(blobs)
-        elif self.bloom_mode == "cuckoo":
-            from crawler_spark.operators.cuckoo import build_cuckoos, update_cuckoos
-
-            sidecar = self.catalog.read(self._sidecar_table(), seen_ops.BLOOM_SCHEMA)
-            merged = update_cuckoos(sidecar, new_seen).cache()
-            flagged = merged.filter(F.col("needs_rebuild") == 1).select("host_hash")
-            kept = merged.filter(F.col("needs_rebuild") == 0).drop("needs_rebuild")
-            rebuilt = build_cuckoos(
-                self.seen().join(F.broadcast(flagged), on="host_hash", how="left_semi")
+        blobs = dict(self._bitmaps())
+        # Arrow transfer + vectorized per-bucket fold: the per-Row
+        # Python loop this replaces cost seconds per round at 10^5
+        # inserts — pure driver serial time that does not shrink
+        # with executors.
+        pdf = new_seen.select("host_hash", "fp").toPandas()
+        for hh, grp in pdf.groupby("host_hash"):
+            blobs[int(hh)] = seen_ops.bloom_build(
+                grp["fp"].to_numpy(dtype=np.int64), blobs.get(int(hh))
             )
-            self._bloom_bitmaps = None
-            self._invalidate_bloom_broadcast()
-            self.catalog.overwrite(
-                self._sidecar_table(), kept.unionByName(rebuilt)
-            )
-            merged.unpersist()
-        else:
-            self._bloom_bitmaps = None
-            self._invalidate_bloom_broadcast()
-            bloom = self.catalog.read("seen_bloom", seen_ops.BLOOM_SCHEMA)
-            self.catalog.overwrite("seen_bloom", seen_ops.update_blooms(bloom, new_seen))
+        self._bloom_bitmaps = blobs
+        self._invalidate_bloom_broadcast()
+        self._snapshot_blobs(blobs)
 
     def _portal_id_bases(self) -> dict[str, int]:
         """Per-portal max stored id, held on the driver between rounds
@@ -459,31 +366,9 @@ class CrawlEngine:
         # the frontier permanently — this also reconciles rows a crashed
         # run stored but never removed (harvest re-run semantics,
         # src/harvester.py:133-177).
-        if not self.use_bloom:
-            unseen = seen_ops.filter_unseen(eligible, seen)
-        elif self.bloom_mode in ("broadcast", "cuckoo") and self._broadcast_fits():
-            probe_fn = None
-            if self.bloom_mode == "cuckoo":
-                from crawler_spark.operators.cuckoo import cuckoo_maybe_contains
-
-                probe_fn = cuckoo_maybe_contains
-            unseen = seen_ops.filter_unseen(
-                eligible,
-                seen,
-                spark=self.spark,
-                probe_fn=probe_fn,
-                bloom_bc=self._bloom_broadcast(),
-            )
-        else:
-            # cogroup path: explicit mode, or broadcast/cuckoo blobs
-            # grown past BROADCAST_BLOOM_MAX_BYTES (auto-fallback)
-            probe_fn = None
-            if self.bloom_mode == "cuckoo":
-                from crawler_spark.operators.cuckoo import cuckoo_maybe_contains
-
-                probe_fn = cuckoo_maybe_contains
-            bloom = self.catalog.read(self._sidecar_table(), seen_ops.BLOOM_SCHEMA)
-            unseen = seen_ops.filter_unseen(eligible, seen, bloom, probe_fn=probe_fn)
+        unseen = seen_ops.filter_unseen(
+            eligible, seen, spark=self.spark, bloom_bc=self._bloom_broadcast()
+        )
         admitted, leftover, admit_handle = politeness.admit_split(
             unseen, self.robots_rules, self.round_duration, self.n_salt
         )
@@ -756,8 +641,7 @@ class CrawlEngine:
             # of doubling seen rows.
             self.catalog.merge_insert("seen", new_seen, key="url", schema=schemas.SEEN)
             mark("seen")
-            if self.use_bloom:
-                self._commit_bloom(new_seen)
+            self._commit_bloom(new_seen)
             mark("bloom")
 
         def _commit_lineage() -> pd.DataFrame:
@@ -852,16 +736,13 @@ class CrawlEngine:
 
         The re-crawl path the reference lacks (its URL dedup is
         permanent, src/harvester.py:133-166). Removes the URLs from
-        the seen table and — in cuckoo mode — DELETEs their
-        fingerprints from the sidecar in place; bloom sidecars are
-        append-only, so there the AFFECTED buckets rebuild
-        partition-side from the remaining seen rows (untouched buckets
-        keep their bitmaps). ``drop_pages`` also removes the stored
-        rows AND
-        their bridge rows (keyword counts over the bridge must not
-        keep counting a dropped id, and the re-crawled copy gets a
-        fresh id with fresh matches — append order, like a fresh
-        harvest).
+        the seen table; bloom bits cannot be cleared, so the AFFECTED
+        sidecar buckets rebuild partition-side from the remaining seen
+        rows (untouched buckets keep their bitmaps). ``drop_pages``
+        also removes the stored rows AND their bridge rows (keyword
+        counts over the bridge must not keep counting a dropped id,
+        and the re-crawled copy gets a fresh id with fresh matches —
+        append order, like a fresh harvest).
 
         With ``drop_pages=False`` the page row is intentionally kept
         authoritative: the re-fetch is admitted (lineage/metrics see
@@ -887,54 +768,25 @@ class CrawlEngine:
         self.catalog.overwrite(
             "seen", seen.join(urls, on="url", how="left_anti")
         )
-        if self.use_bloom:
-            if self.bloom_mode == "cuckoo":
-                from crawler_spark.operators.cuckoo import CuckooFilter
-
-                blobs = dict(self._bitmaps())
-                by_bucket: dict[int, list[int]] = {}
-                for r in rows:
-                    by_bucket.setdefault(int(r["host_hash"]), []).append(r["fp"])
-                for hh, fps in by_bucket.items():
-                    if hh not in blobs:
-                        continue
-                    cf = CuckooFilter.from_bytes(blobs[hh])
-                    for fp in fps:
-                        cf.delete(int(fp))
-                    blobs[hh] = cf.to_bytes()
-                self._bloom_bitmaps = blobs
-                self._invalidate_bloom_broadcast()
-                self._snapshot_blobs(blobs)
-            else:
-                # bloom bits cannot be cleared: rebuild ONLY the
-                # buckets that lost fingerprints, partition-side
-                # (groupBy(host_hash).applyInPandas over the remaining
-                # rows of those hosts) — never a driver materialization
-                # of the seen table. A bucket whose every url expired
-                # simply vanishes from the sidecar; the prefilter
-                # treats a missing bucket as maybe-unseen, which the
-                # exact anti-join then resolves. Mirrors the cuckoo
-                # overflow rebuild path in _commit_bloom.
-                affected = self.spark.createDataFrame(
-                    [(int(h),) for h in {int(r["host_hash"]) for r in rows}],
-                    "host_hash int",
-                )
-                sidecar = self.catalog.read(
-                    self._sidecar_table(), seen_ops.BLOOM_SCHEMA
-                )
-                kept = sidecar.join(
-                    F.broadcast(affected), on="host_hash", how="left_anti"
-                )
-                rebuilt = seen_ops.build_blooms(
-                    self.seen().join(
-                        F.broadcast(affected), on="host_hash", how="left_semi"
-                    )
-                )
-                self._bloom_bitmaps = None
-                self._invalidate_bloom_broadcast()
-                self.catalog.overwrite(
-                    self._sidecar_table(), kept.unionByName(rebuilt)
-                )
+        # rebuild ONLY the buckets that lost fingerprints,
+        # partition-side (groupBy(host_hash).applyInPandas over the
+        # remaining rows of those hosts) — never a driver
+        # materialization of the seen table. A bucket whose every url
+        # expired simply vanishes from the sidecar; the prefilter
+        # treats a missing bucket as definitely unseen, which is exact
+        # because no seen row remains in it.
+        affected = self.spark.createDataFrame(
+            [(int(h),) for h in {int(r["host_hash"]) for r in rows}],
+            "host_hash int",
+        )
+        sidecar = self.catalog.read("seen_bloom", seen_ops.BLOOM_SCHEMA)
+        kept = sidecar.join(F.broadcast(affected), on="host_hash", how="left_anti")
+        rebuilt = seen_ops.build_blooms(
+            self.seen().join(F.broadcast(affected), on="host_hash", how="left_semi")
+        )
+        self._bloom_bitmaps = None
+        self._invalidate_bloom_broadcast()
+        self.catalog.overwrite("seen_bloom", kept.unionByName(rebuilt))
         if drop_pages:
             pages = self.pages()
             # bridge rows keyed by the dropped ids must go with them:

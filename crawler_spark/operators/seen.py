@@ -8,13 +8,13 @@ source of truth is a ``left_anti`` join on ``(fp, url)`` against the
 rows whose fingerprint the bloom rejects are definitely unseen and
 bypass the shuffle-heavy exact join. At 10^10 URLs with a high
 revisit rate this turns the anti-join input from O(frontier) into
-O(maybe-seen), while the bloom itself is a few KB per bucket,
-rebuilt incrementally from each round's inserts.
+O(maybe-seen).
 
-Both sides of the exact join are bucketed by the same key (fp), so
-the anti-join is a single co-partitioned shuffle; the bloom cogroup
-shuffles by host_hash, the same partitioning the politeness stage
-needs, so AQE reuses the exchange.
+The sidecar is bounded by construction: one ``BLOOM_BITS`` bitmap
+(16 KiB) per host bucket, ``urls.N_HOST_BUCKETS`` (1024) buckets, so
+at most 16 MiB. It lives on the driver, is folded from each round's
+inserts there, and ships to the probe as one Spark broadcast; the
+probe is a scalar UDF over ``(host_hash, fp)`` only.
 """
 
 from __future__ import annotations
@@ -63,34 +63,12 @@ def bloom_maybe_contains(fps: np.ndarray, bitmap: bytes) -> np.ndarray:
     return out
 
 
-def update_blooms(bloom_df: DataFrame, new_seen: DataFrame) -> DataFrame:
-    """Merge a round's newly-seen fps into the per-bucket bitmaps.
-
-    cogroup(applyInPandas) per host_hash: existing bitmap (if any) is
-    extended in place — O(new rows), never a rescan of the seen table.
-    """
-
-    def merge(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if right.empty:
-            return left[["host_hash", "bitmap"]]
-        hh = int(right["host_hash"].iloc[0]) if not right.empty else int(left["host_hash"].iloc[0])
-        base = left["bitmap"].iloc[0] if not left.empty else None
-        bmp = bloom_build(right["fp"].to_numpy(), bytes(base) if base is not None else None)
-        return pd.DataFrame({"host_hash": [hh], "bitmap": [bmp]})
-
-    return (
-        bloom_df.groupBy("host_hash")
-        .cogroup(new_seen.select("host_hash", "fp").groupBy("host_hash"))
-        .applyInPandas(merge, schema=BLOOM_SCHEMA)
-    )
-
-
 def build_blooms(seen_fps: DataFrame) -> DataFrame:
     """groupBy(host_hash).applyInPandas rebuild of whole bloom buckets
     from the exact seen fingerprints. Expiry path: bloom bits cannot
     be cleared, so affected buckets rebuild from what remains — each
     bucket on its own partition, never a driver materialization of
-    the seen table (the cuckoo twin is cuckoo.build_cuckoos)."""
+    the seen table."""
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         hh = int(pdf["host_hash"].iloc[0])
@@ -108,72 +86,23 @@ def build_blooms(seen_fps: DataFrame) -> DataFrame:
     )
 
 
-def prefilter_unseen(
-    frontier: DataFrame, bloom_df: DataFrame, probe_fn=None
+def prefilter_unseen_broadcast(
+    frontier: DataFrame, bitmaps: dict[int, bytes] | None, spark, bc=None
 ) -> tuple[DataFrame, DataFrame]:
     """Split frontier into (definitely_unseen, maybe_seen) via the bloom.
 
-    Only ``maybe_seen`` needs the exact anti-join. Buckets with no
-    bloom yet are conservatively routed to the exact join.
-    ``probe_fn(fps, blob) -> bool array`` selects the filter family
-    (default bloom; cuckoo sidecars pass cuckoo_maybe_contains).
-    """
-    if probe_fn is None:
-        probe_fn = bloom_maybe_contains
-    cols = frontier.columns
-    out_schema = StructType(frontier.schema.fields + [StructField("maybe_seen", IntegerType(), False)])
+    Only ``maybe_seen`` needs the exact anti-join. The per-bucket
+    bitmap dict rides a Spark broadcast; the probe UDF touches only
+    (host_hash, fp). Rows of a bucket with no bitmap count as
+    definitely unseen, so the caller must hold a bitmap for every
+    bucket that has seen rows.
 
-    def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            return pd.DataFrame(columns=[*cols, "maybe_seen"])
-        if right.empty:
-            left = left.copy()
-            left["maybe_seen"] = 0
-            return left
-        mask = probe_fn(left["fp"].to_numpy(), bytes(right["bitmap"].iloc[0]))
-        left = left.copy()
-        left["maybe_seen"] = mask.astype(np.int32)
-        return left
-
-    probed = (
-        frontier.groupBy("host_hash")
-        .cogroup(bloom_df.groupBy("host_hash"))
-        .applyInPandas(probe, schema=out_schema)
-    )
-    return (
-        probed.filter(F.col("maybe_seen") == 0).drop("maybe_seen"),
-        probed.filter(F.col("maybe_seen") == 1).drop("maybe_seen"),
-    )
-
-
-# Broadcast-probe cutoff: total bloom bitmap bytes that may ship to
-# every executor. Below it, the probe is a narrow scalar UDF over
-# (host_hash, fp) — two long columns through Arrow instead of every
-# frontier column through a cogroup. Above it (cluster scale: 10^10
-# URLs need ~10 bits/key = GBs of bitmap), the co-partitioned cogroup
-# keeps each bucket's bitmap on its own partition.
-BROADCAST_BLOOM_MAX_BYTES = 256 * 1024 * 1024
-
-
-def prefilter_unseen_broadcast(
-    frontier: DataFrame, bitmaps: dict[int, bytes] | None, spark, probe_fn=None, bc=None
-) -> tuple[DataFrame, DataFrame]:
-    """Split frontier via driver-broadcast per-bucket filter blobs.
-
-    Same contract as :func:`prefilter_unseen`; the blob dict rides a
-    Spark broadcast, the probe UDF touches only (host_hash, fp).
-    ``probe_fn(fps, blob) -> bool array`` selects the filter family:
-    default is the bloom probe; pass
-    ``operators.cuckoo.cuckoo_maybe_contains`` for cuckoo sidecars.
-
-    Pass ``bc`` (an existing Broadcast of the blob dict) to reuse one
+    Pass ``bc`` (an existing Broadcast of the bitmap dict) to reuse one
     broadcast across rounds — creating a fresh broadcast per call and
     never unpersisting it accumulates unbounded driver/executor
     memory over a long crawl. The caller owns the handle's lifecycle
     (unpersist when the bitmaps change).
     """
-    if probe_fn is None:
-        probe_fn = bloom_maybe_contains
     if bc is None:
         bc = spark.sparkContext.broadcast(bitmaps)
 
@@ -186,9 +115,9 @@ def prefilter_unseen_broadcast(
         for hh in np.unique(hhs):
             blob = blobs.get(int(hh))
             if blob is None:
-                continue  # no filter for the bucket: definitely-unseen
+                continue  # no bitmap for the bucket: definitely unseen
             m = hhs == hh
-            out[m] = probe_fn(fps[m], blob).astype(np.int32)
+            out[m] = bloom_maybe_contains(fps[m], blob).astype(np.int32)
         return pd.Series(out)
 
     probed = frontier.withColumn("maybe_seen", probe(F.col("host_hash"), F.col("fp")))
@@ -201,10 +130,8 @@ def prefilter_unseen_broadcast(
 def filter_unseen(
     frontier: DataFrame,
     seen: DataFrame,
-    bloom_df: DataFrame | None = None,
     bloom_bitmaps: dict[int, bytes] | None = None,
     spark=None,
-    probe_fn=None,
     bloom_bc=None,
 ) -> DataFrame:
     """Rows of ``frontier`` whose (fp, url) is not in ``seen``.
@@ -212,15 +139,11 @@ def filter_unseen(
     Exact semantics of src/harvester.py:133-166 (only stored
     status-200 pages are "seen"; failures are refetchable). The bloom
     is a prefilter only — exactness always comes from the anti-join.
+    Pass the per-bucket bitmaps, or ``bloom_bc`` (a live broadcast of
+    them), plus the session.
     """
-    seen_keys = seen.select("fp", "url")
-    if (bloom_bitmaps is not None or bloom_bc is not None) and spark is not None:
-        definite, maybe = prefilter_unseen_broadcast(
-            frontier, bloom_bitmaps, spark, probe_fn, bc=bloom_bc
-        )
-    elif bloom_df is not None:
-        definite, maybe = prefilter_unseen(frontier, bloom_df, probe_fn)
-    else:
-        return frontier.join(seen_keys, on=["fp", "url"], how="left_anti")
-    checked = maybe.join(seen_keys, on=["fp", "url"], how="left_anti")
+    definite, maybe = prefilter_unseen_broadcast(
+        frontier, bloom_bitmaps, spark, bc=bloom_bc
+    )
+    checked = maybe.join(seen.select("fp", "url"), on=["fp", "url"], how="left_anti")
     return definite.unionByName(checked)

@@ -64,14 +64,23 @@ def parse_locs(xml_text: str | bytes) -> list[str]:
     (the reference logs and moves on).
     """
     if isinstance(xml_text, (bytes, bytearray)) and bytes(xml_text[:2]) == b"\x1f\x8b":
+        # a .gz file may hold several concatenated members (RFC 1952
+        # 2.2); inflate each in turn, the 50 MB cap applying to their
+        # total. Bytes after the last member that do not start another
+        # member are ignored.
+        rest, parts, total = bytes(xml_text), [], 0
         try:
-            d = zlib.decompressobj(wbits=31)  # gzip member
-            inflated = d.decompress(bytes(xml_text), _SITEMAP_MAX_BYTES)
-            if d.unconsumed_tail:  # exceeds the protocol cap: reject
-                return []
-            xml_text = inflated
+            while rest[:2] == b"\x1f\x8b":
+                d = zlib.decompressobj(wbits=31)
+                part = d.decompress(rest, _SITEMAP_MAX_BYTES - total + 1)
+                total += len(part)
+                if total > _SITEMAP_MAX_BYTES:  # exceeds the protocol cap: reject
+                    return []
+                parts.append(part)
+                rest = d.unused_data
         except zlib.error:
             return []
+        xml_text = b"".join(parts)
     try:
         root = ET.fromstring(xml_text)
     except ET.ParseError:

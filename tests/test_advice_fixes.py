@@ -5,27 +5,16 @@ Each test pins one failure mode found in round-1 review:
   (same-engine replay used to gap per-portal ids and write bridge
   rows pointing at phantom page ids)
 - politeness inner-join silently deleting hosts with no robots entry
-- cuckoo filter capacity overflow turning into seen-set false
-  negatives (re-fetch loops)
-- the broadcast->cogroup auto-fallback (documented in SCALE.md) not
-  actually existing
 - expire_seen leaving bridge rows keyed by dropped page ids
 """
 
 import json
 import shutil
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from crawler_spark.operators import politeness, seen as seen_ops
-from crawler_spark.operators.cuckoo import (
-    CuckooFilter,
-    build_cuckoos,
-    build_filter,
-    update_cuckoos,
-)
+from crawler_spark.operators import politeness
 from crawler_spark.operators.frontier import CrawlEngine
 from crawler_spark.sources.synth import corpus_to_spark, gen_corpus
 from crawler_spark.storage import SnapshotCatalog
@@ -113,54 +102,6 @@ def test_politeness_keeps_hosts_without_robots_entry(spark):
     assert len(unknown_admitted) == max(1, int(120.0 / 60.0))
     # retry_timeout_min defaulted, not null (routing needs it)
     assert all(r["retry_timeout_min"] is not None for r in a)
-
-
-def test_cuckoo_overflow_rebuild_has_no_false_negatives(spark):
-    rng = np.random.Generator(np.random.PCG64(7))
-    fps = rng.integers(-(2**62), 2**62, size=500, dtype=np.int64)
-    tiny = CuckooFilter(n_slots=8)  # capacity ~32 << 500
-    assert tiny.insert_many(fps) < len(fps)  # the failure mode exists
-    rebuilt = build_filter(fps, min_slots=8)
-    assert rebuilt.contains_many(fps).all()  # no false negatives
-
-    # cogroup updater flags the overflowing bucket...
-    sidecar = spark.createDataFrame(
-        [(3, bytearray(tiny.to_bytes()))], seen_ops.BLOOM_SCHEMA
-    )
-    new_seen = spark.createDataFrame(
-        [(3, int(fp)) for fp in fps], "host_hash int, fp long"
-    )
-    merged = update_cuckoos(sidecar, new_seen).collect()
-    assert merged[0]["needs_rebuild"] == 1
-    # ...and the partition-side rebuild covers every fingerprint
-    rebuilt_df = build_cuckoos(new_seen).collect()
-    cf = CuckooFilter.from_bytes(bytes(rebuilt_df[0]["bitmap"]))
-    assert cf.contains_many(fps).all()
-
-
-def test_broadcast_cogroup_auto_fallback_same_results(
-    spark, fix_corpus, tmp_path_factory, monkeypatch
-):
-    """Forcing the size cutoff to 0 must switch broadcast mode onto the
-    cogroup path with identical crawl results."""
-    wh_a = str(tmp_path_factory.mktemp("bc_wh"))
-    eng_a = _mk(spark, fix_corpus, wh_a, bloom_mode="broadcast")
-    eng_a.bootstrap()
-    eng_a.run(max_rounds=20)
-
-    monkeypatch.setattr(seen_ops, "BROADCAST_BLOOM_MAX_BYTES", 0)
-    wh_b = str(tmp_path_factory.mktemp("cg_wh"))
-    eng_b = _mk(spark, fix_corpus, wh_b, bloom_mode="broadcast")
-    eng_b.bootstrap()
-    eng_b.run(max_rounds=20)
-    assert not eng_b._broadcast_fits()  # the fallback actually engaged
-
-    urls_a = {r["url"] for r in eng_a.pages().select("url").collect()}
-    urls_b = {r["url"] for r in eng_b.pages().select("url").collect()}
-    assert urls_a == urls_b
-    seen_a = {r["url"] for r in eng_a.seen().select("url").collect()}
-    seen_b = {r["url"] for r in eng_b.seen().select("url").collect()}
-    assert seen_a == seen_b
 
 
 def test_expire_seen_removes_bridge_rows(spark, fix_corpus, tmp_path_factory):

@@ -201,24 +201,6 @@ def test_rebootstrap_over_existing_warehouse_drains(spark, corpus_module, engine
     assert {r["url"] for r in eng.seen().select("url").collect()} == twin.seen
 
 
-def test_bloom_off_equivalence(spark, corpus_module, tmp_path_factory, twin):
-    cat = SnapshotCatalog(spark, str(tmp_path_factory.mktemp("nobloom_wh")))
-    eng = CrawlEngine(
-        spark,
-        cat,
-        seed_pages=corpus_module["seed_pages"],
-        sitemap_entries=corpus_module["sitemap_entries"],
-        robots_rules=corpus_module["robots_rules"],
-        keywords=corpus_module["keywords"],
-        round_duration=ROUND_DURATION,
-        use_bloom=False,
-        n_salt=1,
-    )
-    eng.bootstrap()
-    eng.run(max_rounds=50)
-    got = {r["url"] for r in eng.seen().select("url").collect()}
-    assert got == twin.seen
-
 def test_lineage_totals_match_twin(
     spark, corpus_module, twin, corpus_pd_module, tmp_path_factory
 ):

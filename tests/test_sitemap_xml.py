@@ -92,6 +92,20 @@ def test_parse_locs_gzip_corrupt_and_bomb_rejected():
     assert parse_locs(bomb) == []
 
 
+def test_parse_locs_multi_member_gzip():
+    import gzip
+
+    # concatenated members inflate to the concatenated document
+    doc = NS_URLSET.encode("utf-8")
+    half = len(doc) // 2
+    two = gzip.compress(doc[:half]) + gzip.compress(doc[half:])
+    assert parse_locs(two) == parse_locs(NS_URLSET)
+    # the 50 MB cap is on the total, not per member
+    pad = b" " * (26 * 1024 * 1024)
+    split_bomb = gzip.compress(b"<urlset>" + pad) + gzip.compress(pad + b"</urlset>")
+    assert parse_locs(split_bomb) == []
+
+
 def test_sitemapindex_regex_filter(spark):
     docs = spark.createDataFrame(
         pd.DataFrame(

@@ -59,8 +59,8 @@ AUDITS = {
     "cosine_topk_ivf": ([r"ArrowEvalPython", r"BroadcastHashJoin", r"Window"], []),
     "politeness_admission": ([r"Window"], []),
     # exact dedup is a LeftAnti join; the bloom prefilter is the
-    # co-partitioned cogroup (FlatMapCoGroupsInPandas) in this query
-    "seen_anti_join": ([r"LeftAnti", r"FlatMapCoGroupsInPandas"], []),
+    # broadcast probe, a scalar Arrow UDF over (host_hash, fp)
+    "seen_anti_join": ([r"LeftAnti", r"ArrowEvalPython"], []),
     "cosine_topk": ([r"Window", r"BroadcastNestedLoopJoin"], [r"ArrowEvalPython"]),
 }
 
