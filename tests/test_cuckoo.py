@@ -1,100 +1,9 @@
-"""Cuckoo-filter seen-set prefilter (north rule: "cuckoo-filter/bloom
-URL-seen set"). Unit behavior plus engine equivalence in cuckoo mode."""
-
-import numpy as np
-import pytest
-from pyspark.sql import functions as F
-
-from crawler_spark.operators.cuckoo import CuckooFilter, cuckoo_maybe_contains
-
-
-def test_no_false_negatives_and_low_fp():
-    cf = CuckooFilter(n_slots=1 << 12, bucket_size=4)
-    rng = np.random.Generator(np.random.PCG64(7))
-    keys = rng.integers(-(2**62), 2**62, 10000, dtype=np.int64)
-    assert cf.insert_many(keys) == len(keys)
-    assert cf.contains_many(keys).all()  # zero false negatives
-    others = rng.integers(-(2**62), 2**62, 20000, dtype=np.int64)
-    others = np.setdiff1d(others, keys)
-    fp_rate = cf.contains_many(others).mean()
-    assert fp_rate < 0.02, fp_rate  # 16-bit fingerprints -> ~2*4/2^16
-
-
-def test_delete_restores_unseen():
-    cf = CuckooFilter(n_slots=1 << 10)
-    keys = np.arange(1000, dtype=np.int64) * 7919
-    cf.insert_many(keys)
-    victim = int(keys[123])
-    assert cf.contains_many(np.asarray([victim]))[0]
-    assert cf.delete(victim)
-    # bloom cannot do this: after delete the key probes absent
-    # (tiny chance another key shares bucket+fingerprint; with these
-    # deterministic keys it does not)
-    assert not cf.contains_many(np.asarray([victim]))[0]
-    assert cf.delete(victim) is False  # already gone
-
-
-def test_capacity_and_kicks():
-    cf = CuckooFilter(n_slots=1 << 8, bucket_size=4)  # 1024 slots
-    keys = np.arange(900, dtype=np.int64) * 104729
-    ok = cf.insert_many(keys)
-    assert ok >= 850  # ~0.95 load factor reachable through kicks
-    inserted = keys[:ok] if ok == len(keys) else keys
-    assert cf.contains_many(inserted[:800]).sum() >= 795
-
-
-def test_serialization_roundtrip():
-    cf = CuckooFilter(n_slots=1 << 10)
-    keys = np.arange(500, dtype=np.int64) * 31337
-    cf.insert_many(keys)
-    buf = cf.to_bytes()
-    back = CuckooFilter.from_bytes(buf, n_slots=1 << 10)
-    assert back.count == cf.count
-    assert back.contains_many(keys).all()
-    assert cuckoo_maybe_contains(keys, buf).all()
-
-
-@pytest.fixture(scope="module")
-def cuckoo_corpus(spark):
-    from crawler_spark.sources.synth import corpus_to_spark, gen_corpus
-
-    return corpus_to_spark(spark, gen_corpus(n_pages=300, n_hosts=4, urlset_size=50))
-
-
-def test_engine_cuckoo_mode_equivalent(spark, cuckoo_corpus, tmp_path_factory):
-    from crawler_spark.operators.frontier import CrawlEngine
-    from crawler_spark.storage import SnapshotCatalog
-
-    results = {}
-    for mode in ("broadcast", "cuckoo"):
-        eng = CrawlEngine(
-            spark,
-            SnapshotCatalog(spark, str(tmp_path_factory.mktemp(f"wh_{mode}"))),
-            seed_pages=cuckoo_corpus["seed_pages"],
-            sitemap_entries=cuckoo_corpus["sitemap_entries"],
-            robots_rules=cuckoo_corpus["robots_rules"],
-            keywords=cuckoo_corpus["keywords"],
-            round_duration=3600.0,
-            store_payload=False,
-            bloom_mode=mode,
-        )
-        eng.bootstrap()
-        eng.run(max_rounds=20)
-        assert eng.pending_count() == 0
-        results[mode] = {
-            "seen": {r["url"] for r in eng.seen().select("url").collect()},
-            "order": sorted(
-                (r["portal"], r["id"], r["url"])
-                for r in eng.pages().select("portal", "id", "url").collect()
-            ),
-        }
-    assert results["cuckoo"]["seen"] == results["broadcast"]["seen"]
-    assert results["cuckoo"]["order"] == results["broadcast"]["order"]
+"""Seen-set expiry followed by a re-crawl: only the expired URLs come back."""
 
 
 def test_expire_and_recrawl(spark, tmp_path_factory):
-    """Cuckoo delete in action: expired URLs are re-fetched by a
-    re-bootstrap, everything else stays skipped."""
+    """Expired URLs are re-fetched by a re-bootstrap, everything else stays
+    skipped by the seen set."""
     from crawler_spark.operators.frontier import CrawlEngine
     from crawler_spark.sources.synth import corpus_to_spark, gen_corpus
     from crawler_spark.storage import SnapshotCatalog
@@ -111,7 +20,6 @@ def test_expire_and_recrawl(spark, tmp_path_factory):
         keywords=corpus["keywords"],
         round_duration=3600.0,
         store_payload=False,
-        bloom_mode="cuckoo",
     )
     eng.bootstrap()
     eng.run(max_rounds=10)
