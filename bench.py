@@ -156,12 +156,12 @@ def _run_crawl(spark, n_pages: int, warm: bool = False, corpus: dict | None = No
 
 
 def run_decode_calibration(spark, n: int = 40000) -> dict:
-    """Hardware-ceiling calibration: the fused decode UDF over n
-    256x256 images — embarrassingly parallel Arrow-batched numpy with
-    zero shuffles. Whatever speedup THIS stage achieves between the
-    two core counts is the maximum any pipeline can achieve on this
-    box (the sandbox's vCPUs are host-overcommitted: measured ~2.4x
-    for 4x threads even here)."""
+    """Decode-stage calibration: the fused decode UDF over n 256x256
+    images — embarrassingly parallel Arrow-batched numpy with zero
+    shuffles. Its speedup between the two core counts is the same-run
+    reference the crawl's scaling is compared with. It runs the
+    crawl's own payload kernels, so it measures their memory traffic
+    as well as the host's: a probe, not a hardware bound."""
     from pyspark.sql import functions as F
 
     from crawler_spark.functions.payload import make_fetch_parse_udf

@@ -217,6 +217,9 @@ def jpeg_meta(data: bytes) -> dict:
         if data[pos] != 0xFF:
             raise ValueError("jpeg marker desync in header walk")
         marker = data[pos + 1]
+        if marker == 0xFF:  # fill byte before a marker (T.81 B.1.1.2)
+            pos += 1
+            continue
         if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
             pos += 2
             continue

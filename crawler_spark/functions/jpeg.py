@@ -713,6 +713,9 @@ def decode_jpeg(data: bytes) -> np.ndarray:
         if data[pos] != 0xFF:
             raise ValueError("jpeg marker desync")
         marker = data[pos + 1]
+        if marker == 0xFF:  # fill byte before a marker (T.81 B.1.1.2)
+            pos += 1
+            continue
         if marker == 0xD9:  # EOI
             if progressive and grids is not None:
                 return _assemble_from_grids(frame, grids, qtables)

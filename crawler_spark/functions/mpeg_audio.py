@@ -274,26 +274,35 @@ def parse_id3v2(data: bytes) -> dict:
 
 
 def _xing_info(data: bytes, pos: int, hdr: FrameHeader) -> dict | None:
-    """Xing/Info block, if present right after this frame's side info."""
+    """Xing/Info block, if present right after this frame's side info.
+
+    Runs before parse_mp3 bounds-checks the frame, so every field read
+    is checked against the data here: a truncated block is a ValueError."""
     off = pos + 4 + (2 if hdr.crc_protected else 0) + side_info_length(
         hdr.version, hdr.channels
     )
     tag = data[off : off + 4]
     if tag not in (b"Xing", b"Info"):
         return None
-    (flags,) = struct.unpack(">I", data[off + 4 : off + 8])
+
+    def u32(p: int) -> int:
+        if p + 4 > len(data):
+            raise ValueError("mp3 Xing/Info block truncated")
+        return struct.unpack_from(">I", data, p)[0]
+
+    flags = u32(off + 4)
     p = off + 8
     out: dict = {"tag": tag.decode(), "flags": flags}
     if flags & 1:
-        (out["frames"],) = struct.unpack(">I", data[p : p + 4])
+        out["frames"] = u32(p)
         p += 4
     if flags & 2:
-        (out["bytes"],) = struct.unpack(">I", data[p : p + 4])
+        out["bytes"] = u32(p)
         p += 4
     if flags & 4:
         p += 100  # seek TOC
     if flags & 8:
-        (out["quality"],) = struct.unpack(">I", data[p : p + 4])
+        out["quality"] = u32(p)
     return out
 
 

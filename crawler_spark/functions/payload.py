@@ -39,6 +39,7 @@ from pyspark.sql.types import (
 )
 
 GLOBAL_SEED = 42
+_LOW7_BYTES = np.uint64(0x7F7F7F7F7F7F7F7F)
 
 # ----------------------------------------------------------------- core
 
@@ -47,20 +48,37 @@ def pixels_for(image_id: str, w: int, h: int) -> np.ndarray:
     """Deterministic ground-truth pixels for a synthetic image.
 
     Seeded PRNG noise plus a low-frequency gradient keyed off the id,
-    so the DCT in phash64 sees structure, not just white noise.
+    so the DCT in phash64 sees structure, not just white noise:
+    pixel = (noise + (x*a + y*b) % 256) // 2, per channel.
+
+    The (h, 3w) pixel bytes are built in whole uint64 words (the byte
+    count padded up to a multiple of 8; the pad is sliced off):
+    - noise: the PCG64 raw 64-bit stream, stored little-endian, is the
+      byte stream ``Generator.integers(0, 256, (h, w, 3), uint8)``
+      draws (low 32-bit half first, low byte first), at a fraction of
+      its cost;
+    - gradient: a uint8 outer add, whose wrap-around is the ``% 256``;
+    - average: ``(a & b) + ((a ^ b) >> 1)`` is ``(a + b) // 2`` per
+      byte. Masking each byte's top bit after the shift keeps bits
+      from crossing bytes, and no byte sum exceeds 255, so one uint64
+      op does eight byte ops exactly.
     """
     seed = (GLOBAL_SEED << 32) ^ zlib.crc32(image_id.encode("utf-8"))
-    rng = np.random.Generator(np.random.PCG64(seed))
-    noise = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-    # uint32 broadcasting instead of int64 mgrid: identical values
-    # (max term ~3.6k << 2^32), a fraction of the memory traffic —
-    # this runs 32-wide on shared bandwidth in the decode stage.
-    yy = np.arange(h, dtype=np.uint32)[:, None]
-    xx = np.arange(w, dtype=np.uint32)[None, :]
-    grad = (
-        (xx * np.uint32(seed % 7 + 1) + yy * np.uint32(seed % 5 + 1)) % np.uint32(256)
-    ).astype(np.uint8)
-    return ((noise.astype(np.uint16) + grad[..., None]) // 2).astype(np.uint8)
+    if h < 0 or w < 0:
+        raise ValueError("negative dimensions are not allowed")
+    n = h * w * 3
+    words = -(-n // 8)
+    noise = np.random.PCG64(seed).random_raw(words).astype("<u8", copy=False).view(np.uint64)
+    grad = np.empty(words, dtype=np.uint64)
+    gx = np.repeat((np.arange(w) * (seed % 7 + 1) % 256).astype(np.uint8), 3)
+    gy = (np.arange(h) * (seed % 5 + 1) % 256).astype(np.uint8)
+    np.add.outer(gy, gx, out=grad.view(np.uint8)[:n].reshape(h, 3 * w))
+    avg = noise ^ grad
+    avg >>= 1
+    avg &= _LOW7_BYTES
+    noise &= grad
+    avg += noise
+    return avg.view(np.uint8)[:n].reshape(h, w, 3)
 
 
 def pixels_gradient(image_id: str, w: int, h: int) -> np.ndarray:
@@ -311,14 +329,27 @@ def _resize_gray(pixels: np.ndarray, size: int = 32) -> np.ndarray:
 
     Multiples of ``size`` use exact average pooling; otherwise
     nearest-neighbor index sampling. Pooling runs on the uint8 data
-    BEFORE the float grayscale dot (the two linear ops commute), so no
-    full-resolution float64 temporary is ever materialized — at 32
-    concurrent decode workers per box that temp is pure memory-
-    bandwidth pressure.
+    BEFORE the float grayscale dot (the two linear ops commute).
+
+    The block sums are exact uint32 integers (255 * bh * bw < 2^32 up
+    to ~17 Gpixel images): one reduce over the ``h/size`` rows of each
+    block on contiguous (size, bh, 3w) rows, then ``w/size`` slice adds
+    into a channel-major accumulator, so every add is one long strided
+    loop. Dividing the exact sum by ``bh * bw`` gives the float64 mean
+    bit for bit, with no full-resolution float64 temporary. Zero-size
+    inputs sum to 0 and divide to NaN, as the float mean does.
     """
     h, w = pixels.shape[:2]
     if h % size == 0 and w % size == 0:
-        small = pixels.reshape(size, h // size, size, w // size, 3).mean(axis=(1, 3))
+        bh, bw = h // size, w // size
+        rows = np.add.reduce(pixels.reshape(size, bh, w * 3), axis=1, dtype=np.uint32)
+        cols = rows.reshape(size, size, bw, 3).transpose(3, 0, 1, 2)
+        acc = np.zeros((3, size, size), dtype=np.uint32)
+        for j in range(bw):
+            acc += cols[..., j]
+        # C order, as the float mean's result: the gray matmul rounds
+        # differently on a transposed layout
+        small = np.ascontiguousarray(acc.transpose(1, 2, 0)) / (bh * bw)
     else:
         ri = (np.arange(size) * h) // size
         ci = (np.arange(size) * w) // size
@@ -337,14 +368,9 @@ def phash64(pixels: np.ndarray) -> int:
     c = _dct_matrix(32)
     d = c @ g @ c.T
     block = d[:8, :8].flatten()
-    ac = block[1:]
-    med = np.median(ac)
-    bits = np.zeros(64, dtype=np.uint64)
-    bits[1:] = (ac > med).astype(np.uint64)
-    val = 0
-    for b in bits:
-        val = (val << 1) | int(b)
-    return (val & ((1 << 63) - 1)) - (val & (1 << 63))
+    bits = block > np.median(block[1:])
+    bits[0] = False
+    return int.from_bytes(np.packbits(bits).tobytes(), "big", signed=True)
 
 
 def psnr(a: np.ndarray, b: np.ndarray) -> float:

@@ -14,6 +14,7 @@ import struct
 import numpy as np
 import pytest
 
+from crawler_spark.functions.image_meta import jpeg_meta
 from crawler_spark.functions.jpeg import (
     AC_LUMA,
     DC_LUMA,
@@ -234,6 +235,41 @@ def test_arithmetic_and_lossless_frames_are_honest_notimplemented():
         c[i + 1] = sof
         with pytest.raises(NotImplementedError, match="progressive"):
             decode_jpeg(bytes(c))
+
+
+def _pad_markers_with_fill(data: bytes, fill: int = 3) -> bytes:
+    """Prefix every marker after SOI with ``fill`` extra 0xFF bytes, the
+    padding T.81 B.1.1.2 permits: header markers by segment length,
+    markers after entropy data (the next scan's tables, EOI) by scan."""
+    out, pos = bytearray(data[:2]), 2
+    while pos < len(data):
+        assert data[pos] == 0xFF
+        marker = data[pos + 1]
+        out += b"\xff" * fill
+        if marker == 0xD9:
+            out += data[pos:]
+            break
+        (seglen,) = struct.unpack(">H", data[pos + 2 : pos + 4])
+        end = pos + 2 + seglen
+        if marker == 0xDA:  # entropy data runs to the next non-RST marker
+            while not (data[end] == 0xFF and data[end + 1] not in (0x00, *range(0xD0, 0xD8))):
+                end += 1
+        out += data[pos:end]
+        pos = end
+    return bytes(out)
+
+
+@pytest.mark.parametrize("progressive", [False, True])
+def test_fill_bytes_before_markers_are_skipped(progressive):
+    """Real-web JPEGs may pad markers with 0xFF fill bytes; the decoder's
+    and the triage's header walks skip them instead of desyncing."""
+    data = encode_jpeg(pixels_for("t_fill", 40, 24), quality=90, progressive=progressive)
+    padded = _pad_markers_with_fill(data)
+    assert len(padded) > len(data)
+    assert np.array_equal(decode_jpeg(padded), decode_jpeg(data))
+    meta = jpeg_meta(padded)
+    assert meta == jpeg_meta(data)
+    assert (meta["w"], meta["h"], meta["progressive"]) == (40, 24, progressive)
 
 
 def test_corrupt_entropy_does_not_hang_or_segfault():

@@ -106,6 +106,16 @@ def test_xing_frame_count_mismatch_rejected():
         parse_mp3(bytes(data))
 
 
+def test_truncated_xing_block_is_value_error():
+    """A stream cut inside the first frame's Xing/Info fields raises the
+    documented ValueError, not struct.error from a short unpack."""
+    data = encode_mp3_shell(6, with_xing=True)
+    off = data.index(b"Info")
+    for cut in range(off + 4, off + 16):  # inside flags, frames, bytes
+        with pytest.raises(ValueError):
+            parse_mp3(data[:cut])
+
+
 def test_id3v2_and_id3v1_skipped():
     core = encode_mp3_shell(4)
     tagged = encode_mp3_shell(4, id3v2_size=123, id3v1=True)
