@@ -524,29 +524,6 @@ def _write_bench_md(result: dict) -> None:
             " distributed plan adds no cross-round shuffle that would grow with"
             " cluster size.",
         ]
-    lines += [
-        "",
-        "## Round-over-round",
-        "",
-        "Round 2 -> round 3: the work went into the per-round SERIAL floor "
-        "that caps measured single-box scaling efficiency — the bloom "
-        "sidecar fold moved from a per-Row driver loop to one Arrow "
-        "transfer + vectorized groupby, the 16-row filter-blob snapshot is "
-        "now a direct pyarrow write instead of a createDataFrame().write "
-        "Spark job (~5s/round), run() stops on a two-column frontier "
-        "probe instead of executing a full no-op round's commit chain "
-        "(~10s at the drain boundary), and all-retry idle rounds "
-        "fast-forward with a metadata-only manifest commit. The headline "
-        "is now the MEDIAN of 3 reps (was fastest-of-2) and the scaling "
-        "evidence carries two N-vs-4N pairs (2->8 and 8->32, the "
-        "BASELINE.md protocol) with per-stage span tables. Measured "
-        "effect at 120k pages, over two full end-to-end runs: 8->32 "
-        "steal-adjusted efficiency 0.349 -> 0.62/0.57 (0.52 -> "
-        "0.71/0.74 of the same-run measured decode ceiling), headline "
-        "2282 -> 2773/3076 URLs/s, crawl median wall 52.6s -> "
-        "43.3/39.0s. No query changed plan this round; suite totals "
-        "86-87s vs round 2's 92.3s.",
-    ]
     lines += ["", "## Per-query seconds", ""]
     lines += [f"- {k}: {v}s" for k, v in result["queries"].items()]
     lines.append("")

@@ -23,6 +23,8 @@ import struct
 
 import numpy as np
 
+from crawler_spark.functions.image_meta import check_pixels
+
 _BI_RGB, _BI_RLE8 = 0, 1
 
 
@@ -146,6 +148,7 @@ def decode_bmp(data: bytes) -> np.ndarray:
     h = abs(h)
     if w <= 0 or h == 0:
         raise ValueError("bmp dimensions invalid")
+    check_pixels(w, h, "bmp")
     pal_off = 14 + hsize
     if bpp == 24 and comp == _BI_RGB:
         stride = (w * 3 + 3) & ~3

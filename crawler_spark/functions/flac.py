@@ -272,26 +272,29 @@ def decode_flac(data: bytes) -> tuple[np.ndarray, int]:
                 break  # unknown-length stream: clean end at sync loss
             raise ValueError("flac frame sync lost")
         hdr_start = pos
-        bs_code = data[pos + 2] >> 4
-        rate_code = data[pos + 2] & 0xF
-        ch_code = data[pos + 3] >> 4
-        size_code = (data[pos + 3] >> 1) & 0x7
-        pos += 4
+        # a frame header is at most 16 bytes: read it zero-padded, so a
+        # truncated one fails the length check below, not an index
+        hdr = data[pos : pos + 16].ljust(16, b"\0")
+        bs_code = hdr[2] >> 4
+        rate_code = hdr[2] & 0xF
+        ch_code = hdr[3] >> 4
+        size_code = (hdr[3] >> 1) & 0x7
+        o = 4
         # UTF-8 coded frame number: skip by its own length
-        lead = data[pos]
+        lead = hdr[o]
         extra = 0
         if lead >= 0xC0:
             b = lead
             while b & 0x40:
                 extra += 1
                 b <<= 1
-        pos += 1 + extra
+        o += 1 + extra
         if bs_code == 6:
-            bs = data[pos] + 1
-            pos += 1
+            bs = hdr[o] + 1
+            o += 1
         elif bs_code == 7:
-            bs = struct.unpack(">H", data[pos : pos + 2])[0] + 1
-            pos += 2
+            bs = int.from_bytes(hdr[o : o + 2], "big") + 1
+            o += 2
         elif bs_code == 1:
             bs = 192
         elif 2 <= bs_code <= 5:
@@ -301,9 +304,12 @@ def decode_flac(data: bytes) -> tuple[np.ndarray, int]:
         else:
             raise ValueError(f"flac reserved blocksize code {bs_code}")
         if rate_code == 12:
-            pos += 1
+            o += 1
         elif rate_code in (13, 14):
-            pos += 2
+            o += 2
+        pos = hdr_start + o
+        if pos >= len(data):
+            raise ValueError("flac frame header truncated")
         if _crc8(data[hdr_start:pos]) != data[pos]:
             raise ValueError("flac frame header CRC mismatch")
         pos += 1
@@ -318,6 +324,8 @@ def decode_flac(data: bytes) -> tuple[np.ndarray, int]:
             frame_ch, assign = 2, "mid_side"
         else:
             raise ValueError(f"flac reserved channel code {ch_code}")
+        if frame_ch != n_ch:
+            raise ValueError(f"flac frame has {frame_ch} channels, STREAMINFO {n_ch}")
         if size_code == 0:
             frame_bps = bps
         else:
@@ -337,6 +345,8 @@ def decode_flac(data: bytes) -> tuple[np.ndarray, int]:
             subs.append(_read_subframe(br, bs, ch_bps))
         br.align()
         frame_end = br.byte
+        if frame_end + 2 > len(data):
+            raise ValueError("flac frame CRC-16 truncated")
         if _crc16(data[hdr_start:frame_end]) != struct.unpack(
             ">H", data[frame_end : frame_end + 2]
         )[0]:

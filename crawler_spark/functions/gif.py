@@ -48,6 +48,8 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
+from crawler_spark.functions.image_meta import check_pixels
+
 _SIG87 = b"GIF87a"
 _SIG89 = b"GIF89a"
 _MAX_CODE = 0xFFF  # 12-bit LZW cap per the spec
@@ -446,6 +448,17 @@ def _frame_pixels(fr: GifFrame, gct: np.ndarray | None) -> np.ndarray:
     return rgb, opaque
 
 
+def _canvas(st: GifStream) -> tuple[np.ndarray, np.ndarray]:
+    """The logical screen filled with the background color, and that color."""
+    check_pixels(st.w, st.h, "gif")
+    bg = (
+        st.gct[st.bg_index]
+        if st.gct is not None and st.bg_index < st.gct.shape[0]
+        else np.zeros(3, dtype=np.uint8)
+    )
+    return np.broadcast_to(bg, (st.h, st.w, 3)).copy(), bg
+
+
 def decode_gif_frames(data: bytes) -> tuple[list[np.ndarray], list[int]]:
     """Full composite decode: list of (h, w, 3) canvases + delays (cs).
 
@@ -455,12 +468,7 @@ def decode_gif_frames(data: bytes) -> tuple[list[np.ndarray], list[int]]:
     absent) — the documented choice for an RGB-only pipeline.
     """
     st = parse_gif(data)
-    bg = (
-        st.gct[st.bg_index]
-        if st.gct is not None and st.bg_index < st.gct.shape[0]
-        else np.zeros(3, dtype=np.uint8)
-    )
-    canvas = np.broadcast_to(bg, (st.h, st.w, 3)).copy()
+    canvas, bg = _canvas(st)
     frames, delays = [], []
     for fr in st.frames:
         before = canvas.copy() if fr.disposal == 3 else None
@@ -479,15 +487,9 @@ def decode_gif_frames(data: bytes) -> tuple[list[np.ndarray], list[int]]:
 def decode_gif(data: bytes) -> np.ndarray:
     """Decode a still GIF (first frame's composed canvas)."""
     st = parse_gif(data)
-    st.frames = st.frames[:1]
-    bg = (
-        st.gct[st.bg_index]
-        if st.gct is not None and st.bg_index < st.gct.shape[0]
-        else np.zeros(3, dtype=np.uint8)
-    )
-    canvas = np.broadcast_to(bg, (st.h, st.w, 3)).copy()
     fr = st.frames[0]
-    rgb, opaque = _frame_pixels(fr, st.gct)
+    rgb, opaque = _frame_pixels(fr, st.gct)  # a corrupt LZW fails before the canvas exists
+    canvas, _ = _canvas(st)
     region = canvas[fr.top : fr.top + fr.h, fr.left : fr.left + fr.w]
     region[opaque] = rgb[opaque]
     return canvas

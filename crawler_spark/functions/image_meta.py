@@ -31,7 +31,15 @@ from __future__ import annotations
 import struct
 import zlib
 
-from crawler_spark.functions.gif import gif_frame_meta
+# The most pixels a decoder allocates for one image, the same guard as
+# PIL's MAX_IMAGE_PIXELS: a header may claim 65535 x 65535 (12 GiB of
+# RGB) in a few bytes, so dims are checked before any canvas exists.
+MAX_PIXELS = 1 << 26
+
+
+def check_pixels(w: int, h: int, fmt: str) -> None:
+    if w * h > MAX_PIXELS:
+        raise ValueError(f"{fmt} claims {w}x{h} pixels, over the {MAX_PIXELS} cap")
 
 # EXIF/TIFF tag ids (public EXIF 2.x / TIFF 6.0 spec)
 _TAG_MAKE = 0x010F
@@ -282,6 +290,8 @@ def image_meta(data: bytes) -> dict:
     if fmt == "png":
         return png_meta(data)
     if fmt == "gif":
+        from crawler_spark.functions.gif import gif_frame_meta
+
         meta = gif_frame_meta(data)
         meta["fmt"] = "gif"
         return meta

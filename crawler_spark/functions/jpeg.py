@@ -43,6 +43,8 @@ import struct
 
 import numpy as np
 
+from crawler_spark.functions.image_meta import check_pixels
+
 # ------------------------------------------------------------- tables
 
 ZIGZAG = np.array(
@@ -606,7 +608,6 @@ class _BitReader:
         self.pos = pos
         self.acc = 0
         self.nbits = 0
-        self.hit_marker = False
 
     def _fill(self) -> None:
         d = self.data
@@ -614,25 +615,18 @@ class _BitReader:
             raise ValueError("jpeg entropy stream truncated")
         b = d[self.pos]
         if b == 0xFF:
-            nxt = d[self.pos + 1] if self.pos + 1 < len(d) else None
-            if nxt == 0x00:
-                self.pos += 2
-            elif nxt is not None and 0xD0 <= nxt <= 0xD7:
-                # restart marker reached mid-read: caller handles via
-                # sync_restart(); flag and feed zero bits defensively
-                self.hit_marker = True
-                self.acc = (self.acc << 8)
-                self.nbits += 8
-                return
-            else:
-                self.hit_marker = True
-                self.acc = (self.acc << 8)
-                self.nbits += 8
-                return
+            if self.pos + 1 >= len(d) or d[self.pos + 1] != 0x00:
+                # a marker (RSTn, EOI, the next SOS) inside a block: the
+                # segment ran out of coded bits. Feeding zero bits past
+                # it would "decode" as many blocks as the frame header
+                # claims, whatever the bytes present
+                raise ValueError("jpeg entropy segment ends mid-block")
+            self.pos += 2
         else:
             self.pos += 1
-        self.acc = (self.acc << 8) | b
-        self.nbits += 8
+        # only refilled once empty, so the byte is all the buffer holds
+        self.acc = b
+        self.nbits = 8
 
     def read_bit(self) -> int:
         if self.nbits == 0:
@@ -650,7 +644,6 @@ class _BitReader:
         """Byte-align and consume the expected RSTn marker."""
         self.acc = 0
         self.nbits = 0
-        self.hit_marker = False
         d = self.data
         while self.pos + 1 < len(d):
             if d[self.pos] == 0xFF and 0xD0 <= d[self.pos + 1] <= 0xD7:
@@ -666,6 +659,8 @@ def _build_decode_table(bits: list[int], vals: list[int]) -> dict[tuple[int, int
     k = 0
     for length in range(1, 17):
         for _ in range(bits[length - 1]):
+            if code >= 1 << length:
+                raise ValueError("jpeg huffman table has more codes than bits")
             table[(length, code)] = vals[k]
             code += 1
             k += 1
@@ -681,6 +676,13 @@ def _huff_decode(br: _BitReader, table: dict[tuple[int, int], int]) -> int:
         if sym is not None:
             return sym
     raise ValueError("invalid huffman code in jpeg stream")
+
+
+def _dc_size(br: _BitReader, table: dict[tuple[int, int], int]) -> int:
+    size = _huff_decode(br, table)
+    if size > 11:  # T.81 F.1.2.1: 8-bit DC differences need at most 11 bits
+        raise ValueError(f"jpeg DC magnitude category {size} > 11")
+    return size
 
 
 def _extend(v: int, size: int) -> int:
@@ -743,14 +745,9 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                 q[ZIGZAG] = tbl.astype(np.int64)
                 qtables[tq] = q
         elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/SOF1 baseline, SOF2 progressive
-            prec, fh, fw, nc = struct.unpack(">BHHB", seg[:6])
-            if prec != 8:
-                raise NotImplementedError("only 8-bit jpeg supported")
-            comps = []
-            for i in range(nc):
-                cid, hv, tq = seg[6 + 3 * i : 9 + 3 * i]
-                comps.append((cid, hv >> 4, hv & 15, tq))
-            frame = (fh, fw, comps)
+            if frame is not None:
+                raise ValueError("jpeg has more than one SOF")
+            frame = _parse_sof(seg, len(data))
             progressive = marker == 0xC2
         elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
             raise NotImplementedError(
@@ -764,17 +761,26 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                 bits = list(seg[off + 1 : off + 17])
                 n = sum(bits)
                 vals = list(seg[off + 17 : off + 17 + n])
+                if len(bits) != 16 or len(vals) != n:
+                    raise ValueError("truncated jpeg DHT segment")
                 htables[(tc, th)] = _build_decode_table(bits, vals)
                 off += 17 + n
         elif marker == 0xDD:  # DRI
+            if len(seg) < 2:
+                raise ValueError("truncated jpeg DRI segment")
             (restart_interval,) = struct.unpack(">H", seg[:2])
         elif marker == 0xDA:  # SOS — entropy data follows
             if frame is None:
                 raise ValueError("jpeg SOS before SOF")
-            ns = seg[0]
+            ns = seg[0] if seg else 0
+            if not ns or len(seg) < 4 + 2 * ns:
+                raise ValueError("truncated jpeg SOS segment")
+            ids = {c[0] for c in frame[2]}
             scan_comps = []
             for i in range(ns):
                 cs, tdta = seg[1 + 2 * i : 3 + 2 * i]
+                if cs not in ids:
+                    raise ValueError(f"jpeg scan references unknown component {cs}")
                 scan_comps.append((cs, tdta >> 4, tdta & 15))
             if not progressive:
                 return _decode_scan(
@@ -818,6 +824,41 @@ def decode_jpeg(data: bytes) -> np.ndarray:
     raise ValueError("jpeg has no SOS scan")
 
 
+def _parse_sof(seg: bytes, n_bytes: int) -> tuple:
+    """SOF fields -> (fh, fw, [(cid, hs, vs, tq), ...]), rejecting any
+    frame the decoder cannot lay out or the stream cannot back."""
+    if len(seg) < 6:
+        raise ValueError("truncated jpeg SOF segment")
+    prec, fh, fw, nc = struct.unpack(">BHHB", seg[:6])
+    if prec != 8:
+        raise NotImplementedError("only 8-bit jpeg supported")
+    if nc not in (1, 3):
+        raise NotImplementedError(f"{nc}-component jpeg unsupported")
+    if len(seg) < 6 + 3 * nc:
+        raise ValueError("truncated jpeg SOF segment")
+    comps = []
+    for i in range(nc):
+        cid, hv, tq = seg[6 + 3 * i : 9 + 3 * i]
+        comps.append((cid, hv >> 4, hv & 15, tq))
+    hmax = max(c[1] for c in comps)
+    vmax = max(c[2] for c in comps)
+    for _, hs, vs, _ in comps:
+        if not (1 <= hs <= 4 and 1 <= vs <= 4):
+            raise ValueError("jpeg sampling factor outside 1..4")
+        if hmax % hs or vmax % vs:
+            raise NotImplementedError("jpeg sampling factors must divide the maximum")
+    if not (fh and fw):
+        raise NotImplementedError("jpeg frame height from a DNL marker unsupported")
+    check_pixels(fw, fh, "jpeg")
+    # the full-resolution component codes every one of its blocks, each
+    # with at least one bit, so a frame claiming more blocks than the
+    # stream has bits is corrupt; this bounds decode work by the bytes
+    # present rather than by the claimed size
+    if -(-fw // 8) * -(-fh // 8) > 8 * n_bytes:
+        raise ValueError(f"jpeg frame {fw}x{fh} claims more blocks than the stream codes")
+    return fh, fw, comps
+
+
 def _decode_scan(
     data: bytes,
     pos: int,
@@ -839,6 +880,10 @@ def _decode_scan(
     comp_geom = []
     for idx, (cs, td, ta) in enumerate(scan_comps):
         hs, vs, tq = by_id[cs]
+        if (0, td) not in htables or (1, ta) not in htables:
+            raise ValueError("jpeg scan references undefined huffman table")
+        if tq not in qtables:
+            raise ValueError("jpeg component references undefined quant table")
         order.append((idx, htables[(0, td)], htables[(1, ta)], hs, vs))
         comp_blocks.append([])
         comp_geom.append((hs, vs, tq))
@@ -853,7 +898,7 @@ def _decode_scan(
         for idx, dct, act, hs, vs in order:
             for _ in range(hs * vs):
                 zz = np.zeros(64, dtype=np.int64)
-                size = _huff_decode(br, dct)
+                size = _dc_size(br, dct)
                 diff = _extend(br.receive(size), size)
                 prev_dc[idx] += diff
                 zz[0] = prev_dc[idx]
@@ -867,8 +912,8 @@ def _decode_scan(
                         continue
                     run, size = sym >> 4, sym & 15
                     k += run
-                    if k > 63:
-                        raise ValueError("jpeg AC run past block end")
+                    if k > 63 or size > 10:
+                        raise ValueError("jpeg AC run past block end or size > 10")
                     zz[k] = _extend(br.receive(size), size)
                     k += 1
                 comp_blocks[idx].append(zz)
@@ -939,6 +984,8 @@ def _decode_progressive_scan(
     mcuy = -(-fh // (8 * vmax))
     if ss == 0 and se != 0:
         raise ValueError("progressive DC scan must have Se=0")
+    if not ss <= se <= 63 or ah > 13 or al > 13:
+        raise ValueError("jpeg progressive scan parameters out of range")
     if len(scan_comps) > 1 and ss != 0:
         raise ValueError("progressive AC scans must be non-interleaved")
 
@@ -995,7 +1042,7 @@ def _decode_prog_block(br, zz, ss, se, ah, al, dct, act, dcpred, ci, state) -> N
         if ah == 0:
             if dct is None:
                 raise ValueError("jpeg DC scan references undefined huffman table")
-            size = _huff_decode(br, dct)
+            size = _dc_size(br, dct)
             diff = _extend(br.receive(size), size)
             dcpred[ci] += diff
             zz[0] = dcpred[ci] << al
@@ -1025,8 +1072,8 @@ def _dec_ac_first(br, zz, ss, se, al, act, state) -> None:
         r, s = sym >> 4, sym & 15
         if s:
             k += r
-            if k > se:
-                raise ValueError("jpeg progressive AC run past band end")
+            if k > se or s > 10:
+                raise ValueError("jpeg progressive AC run past band end or size > 10")
             zz[k] = _extend(br.receive(s), s) << al
             k += 1
         elif r != 15:

@@ -38,6 +38,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from crawler_spark.functions.image_meta import check_pixels, image_meta
+
 GLOBAL_SEED = 42
 _LOW7_BYTES = np.uint64(0x7F7F7F7F7F7F7F7F)
 
@@ -154,36 +156,24 @@ def decode_payload(data: bytes, w: int, h: int, fmt: str = "raw") -> np.ndarray:
             raise ValueError(f"raw payload size {arr.size} != {w}x{h}x3")
         return arr.reshape(h, w, 3)
     if fmt == "png":
-        px = decode_png(data)
-        if px.shape != (h, w, 3):
-            raise ValueError(f"png dims {px.shape[1]}x{px.shape[0]} != expected {w}x{h}")
-        return px
-    if fmt in ("jpeg", "jpeg_progressive"):  # decode_jpeg detects SOF0/SOF2
-        from crawler_spark.functions.jpeg import decode_jpeg
-
-        px = decode_jpeg(data)
-        if px.shape != (h, w, 3):
-            raise ValueError(
-                f"jpeg dims {px.shape[1]}x{px.shape[0]} != expected {w}x{h}"
-            )
-        return px
-    if fmt in ("gif", "gif_interlaced"):  # decoder reads the interlace flag
-        from crawler_spark.functions.gif import decode_gif
-
-        px = decode_gif(data)
-        if px.shape != (h, w, 3):
-            raise ValueError(f"gif dims {px.shape[1]}x{px.shape[0]} != expected {w}x{h}")
-        return px
-    if fmt in ("bmp", "bmp_rle8"):  # decoder reads bpp/compression fields
-        from crawler_spark.functions.bmp import decode_bmp
-
-        px = decode_bmp(data)
-        if px.shape != (h, w, 3):
-            raise ValueError(f"bmp dims {px.shape[1]}x{px.shape[0]} != expected {w}x{h}")
-        return px
-    raise NotImplementedError(
-        f"codec {fmt!r} not available in this environment (no image libs)"
-    )
+        decode = decode_png
+    elif fmt in ("jpeg", "jpeg_progressive"):  # decode_jpeg detects SOF0/SOF2
+        from crawler_spark.functions.jpeg import decode_jpeg as decode
+    elif fmt in ("gif", "gif_interlaced"):  # decoder reads the interlace flag
+        from crawler_spark.functions.gif import decode_gif as decode
+    elif fmt in ("bmp", "bmp_rle8"):  # decoder reads bpp/compression fields
+        from crawler_spark.functions.bmp import decode_bmp as decode
+    else:
+        raise NotImplementedError(
+            f"codec {fmt!r} not available in this environment (no image libs)"
+        )
+    # the header's dims, read in O(header bytes): a payload claiming
+    # other (or far more) pixels than expected fails before any decode
+    # work or allocation; each decoder returns exactly its header's dims
+    head = image_meta(data)
+    if (head["w"], head["h"]) != (w, h):
+        raise ValueError(f"{fmt} dims {head['w']}x{head['h']} != expected {w}x{h}")
+    return decode(data)
 
 
 # ------------------------------------------------------------------ png
@@ -256,12 +246,17 @@ def decode_png(data: bytes) -> np.ndarray:
         (crc,) = struct.unpack(">I", data[pos + 8 + length : pos + 12 + length])
         if zlib.crc32(tag + payload) & 0xFFFFFFFF != crc:
             raise ValueError(f"CRC mismatch in chunk {tag!r}")
+        if (tag == b"IHDR") != (pos == 8):
+            raise ValueError("png IHDR must be the first chunk, and only it")
         if tag == b"IHDR":
+            if length != 13:
+                raise ValueError(f"png IHDR length {length} != 13")
             w, h, depth, ctype, comp, filt, interlace = struct.unpack(">IIBBBBB", payload)
             if (depth, ctype, comp, filt, interlace) != (8, 2, 0, 0, 0):
                 raise NotImplementedError(
                     f"png layout unsupported: depth={depth} color={ctype} interlace={interlace}"
                 )
+            check_pixels(w, h, "png")
         elif tag == b"IDAT":
             idat.append(payload)
         elif tag == b"IEND":
@@ -269,8 +264,11 @@ def decode_png(data: bytes) -> np.ndarray:
         pos += 12 + length
     if w is None or not idat:
         raise ValueError("png missing IHDR/IDAT")
-    raw = zlib.decompress(b"".join(idat))
     stride = 1 + w * 3
+    try:  # inflate no more than the scanlines the header promises
+        raw = zlib.decompressobj().decompress(b"".join(idat), h * stride + 1)
+    except zlib.error as e:
+        raise ValueError(f"png IDAT stream corrupt: {e}") from None
     if len(raw) != h * stride:
         raise ValueError(f"png scanline data {len(raw)} != {h}x{stride}")
     scan = np.frombuffer(raw, dtype=np.uint8).reshape(h, stride)
@@ -381,18 +379,48 @@ def psnr(a: np.ndarray, b: np.ndarray) -> float:
     return float(10.0 * np.log10(255.0**2 / mse))
 
 
-# ------------------------------------------------------------- UDFs
+# ------------------------------------------------------------ row guard
 
-FETCH_RESULT_SCHEMA = StructType([StructField("bytes", BinaryType(), True)])
-
-PARSE_RESULT_SCHEMA = StructType(
-    [
-        StructField("phash", LongType(), True),
-        StructField("decode_ok", BooleanType(), False),
-        StructField("psnr_db", DoubleType(), True),
-    ]
+# The errors that mean "this payload is malformed, or in a layout the
+# codecs do not decode". The decoders themselves raise ValueError or
+# NotImplementedError (tests/test_decoder_fuzz.py holds them to that);
+# the rest are what binary parsing raises on short or inconsistent
+# input, so a decoder gap nobody has found yet costs one row, not a
+# task and with it the round.
+BAD_PAYLOAD = (
+    ValueError,
+    NotImplementedError,
+    TypeError,
+    LookupError,
+    ArithmeticError,
+    struct.error,
+    zlib.error,
 )
 
+
+def guard_rows(rows, derive, failed, columns: list[str]) -> pd.DataFrame:
+    """The payload layer's one per-row fault boundary.
+
+    ``derive(*row)`` returns (or yields) the row's output records as
+    dicts; frame sampling gives several per row. When it raises
+    BAD_PAYLOAD the row yields the one record ``failed(*row)`` instead:
+    the row's key columns and a 0/False ok flag, every other column
+    null. A row's records are emitted only once derive has finished,
+    so a failure row never sits next to part of the same row's output.
+    Columns are object dtype, so a null does not turn an int64 column
+    such as phash into float64, which would round its other values.
+    """
+    out = []
+    for row in rows:
+        try:
+            recs = list(derive(*row))
+        except BAD_PAYLOAD:
+            recs = [{**dict.fromkeys(columns), **failed(*row)}]
+        out.extend(recs)
+    return pd.DataFrame(out, columns=columns, dtype=object)
+
+
+# ------------------------------------------------------------- UDF
 
 FETCH_PARSE_SCHEMA = StructType(
     [
@@ -436,6 +464,12 @@ def make_fetch_parse_udf(
     when ``store_bytes`` (the reference always persists html_body,
     src/harvester.py:263-281; metrics-only runs skip the transfer).
 
+    A row runs under guard_rows: a fetch or decode that raises
+    BAD_PAYLOAD gives ``decode_ok`` False, null phash and PSNR, and
+    still keeps the fetched bytes when ``store_bytes`` — a body that
+    does not decode is stored as fetched, like the reference's
+    html_body.
+
     ``validate`` re-derives the ground-truth pixels and scores PSNR
     against them — the fidelity-suite contract (input_hint: decoded
     allclose, PSNR >= 40 dB). A production crawl has no ground truth
@@ -443,79 +477,34 @@ def make_fetch_parse_udf(
     """
 
     gen = pixel_fn or pixels_for
+    columns = [f.name for f in FETCH_PARSE_SCHEMA.fields]
+
+    def fetch(iid: str, w: int, h: int, fmt: str) -> bytes:
+        if fetch_fn is not None:
+            return fetch_fn(iid, w, h, fmt)
+        return encode_payload(gen(iid, w, h), fmt)
 
     @F.pandas_udf(FETCH_PARSE_SCHEMA)
     def fetch_parse(
         image_id: pd.Series, w: pd.Series, h: pd.Series, fmt: pd.Series
     ) -> pd.DataFrame:
-        byts: list[bytes | None] = []
-        phashes: list[int | None] = []
-        oks: list[bool] = []
-        psnrs: list[float | None] = []
-        for iid, ww, hh, ff in zip(image_id, w, h, fmt):
-            try:
-                if fetch_fn is not None:
-                    data = fetch_fn(iid, int(ww), int(hh), ff)
-                else:
-                    data = encode_payload(gen(iid, int(ww), int(hh)), ff)
-                px = decode_payload(data, int(ww), int(hh), ff)
-                byts.append(data if store_bytes else None)
-                phashes.append(phash64(px))
-                oks.append(True)
-                if validate:
-                    p = psnr(px, gen(iid, int(ww), int(hh)))
-                    psnrs.append(p if np.isfinite(p) else 99.0)
-                else:
-                    psnrs.append(None)
-            except (ValueError, NotImplementedError):
-                byts.append(None)
-                phashes.append(None)
-                oks.append(False)
-                psnrs.append(None)
-        return pd.DataFrame(
-            {"bytes": byts, "phash": phashes, "decode_ok": oks, "psnr_db": psnrs}
-        )
+        body = [None]  # the current row's fetched bytes, for failed()
+
+        def parse(iid, ww, hh, ff):
+            ww, hh = int(ww), int(hh)
+            body[0] = None
+            body[0] = data = fetch(iid, ww, hh, ff)
+            px = decode_payload(data, ww, hh, ff)
+            score = None
+            if validate:
+                p = psnr(px, gen(iid, ww, hh))
+                score = p if np.isfinite(p) else 99.0
+            kept = data if store_bytes else None
+            return [{"bytes": kept, "phash": phash64(px), "decode_ok": True, "psnr_db": score}]
+
+        def failed(*_):
+            return {"bytes": body[0] if store_bytes else None, "decode_ok": False}
+
+        return guard_rows(zip(image_id, w, h, fmt), parse, failed, columns)
 
     return fetch_parse
-
-
-@F.pandas_udf(BinaryType())
-def synth_fetch_bytes(image_id: pd.Series, w: pd.Series, h: pd.Series, fmt: pd.Series) -> pd.Series:
-    """The synthetic fetch: materialize payload bytes for a URL batch.
-
-    Stands in for the rate-limited requests.get
-    (src/harvester.py:428-442); deterministic so the fidelity oracle
-    can recompute the identical payload.
-    """
-    out = []
-    for iid, ww, hh, ff in zip(image_id, w, h, fmt):
-        out.append(encode_payload(pixels_for(iid, int(ww), int(hh)), ff))
-    return pd.Series(out)
-
-
-@F.pandas_udf(PARSE_RESULT_SCHEMA)
-def parse_payload(
-    data: pd.Series, w: pd.Series, h: pd.Series, fmt: pd.Series, image_id: pd.Series
-) -> pd.DataFrame:
-    """Decode + validate a payload batch: phash, PSNR vs ground truth.
-
-    Analog of building the BeautifulSoup tree once per page and
-    extracting fields (src/advert.py:22-26, 188-285): payload ->
-    struct of derived fields, one Arrow batch at a time.
-    """
-    phashes: list[int | None] = []
-    oks: list[bool] = []
-    psnrs: list[float | None] = []
-    for d, ww, hh, ff, iid in zip(data, w, h, fmt, image_id):
-        try:
-            px = decode_payload(d, int(ww), int(hh), ff)
-            ref = pixels_for(iid, int(ww), int(hh))
-            p = psnr(px, ref)
-            phashes.append(phash64(px))
-            oks.append(True)
-            psnrs.append(p if np.isfinite(p) else 99.0)
-        except (ValueError, NotImplementedError):
-            phashes.append(None)
-            oks.append(False)
-            psnrs.append(None)
-    return pd.DataFrame({"phash": phashes, "decode_ok": oks, "psnr_db": psnrs})

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from crawler_spark import schemas
 from crawler_spark.functions.keywords import keywords_as_rows, make_keyword_matcher
-from crawler_spark.functions.payload import parse_payload
+from crawler_spark.operators.multimodal import image_features
 
 
 def analyze(
@@ -81,12 +81,14 @@ def backfill(catalog, force: bool = False) -> int:
     n = needs.count()
     if n == 0:
         return 0
-    recomputed = needs.filter(F.col("bytes").isNotNull()).withColumn(
-        "parsed", parse_payload("bytes", "w", "h", "fmt", "image_id")
-    )
-    upd = recomputed.select(
-        "url", F.col("parsed.phash").alias("_new_phash")
-    )
+    # the stored bytes are decoded as fetched, keyed by url (aliased
+    # through image_features' id column); a payload that does not
+    # decode leaves phash as it was
+    upd = image_features(
+        needs.filter(F.col("bytes").isNotNull()).select(
+            F.col("url").alias("image_id"), "bytes", "w", "h", "fmt"
+        )
+    ).select(F.col("image_id").alias("url"), F.col("phash").alias("_new_phash"))
     merged = (
         pages.join(upd, on="url", how="left")
         # missing-only and --force both resolve to new-when-present:

@@ -18,6 +18,10 @@ audio_stream_metadata; NotImplementedError remains only where the
 container genuinely lacks the wire format's codec ecosystem: mp3/ogg
 PCM decode and inter-frame video (h264/vp9/av1).
 
+Every mapInPandas here runs its rows through payload.guard_rows
+(_map_guarded): a payload that does not decode is one row with its
+key columns and decode_ok/parse_ok = 0, never a failed task.
+
 Scale notes: payload rows are wide (KB-MB); the iterator-of-batches
 mapInPandas form streams Arrow batches without materializing a
 partition in memory, and spark.sql.files.maxPartitionBytes should be
@@ -44,7 +48,21 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from crawler_spark.functions.payload import decode_payload, phash64
+from crawler_spark.functions.payload import decode_payload, guard_rows, phash64
+
+
+def _map_guarded(df: DataFrame, fields: list[str], schema: StructType, derive, failed) -> DataFrame:
+    """mapInPandas over ``fields`` with every row run through
+    payload.guard_rows: ``derive`` gives a row's output records,
+    ``failed`` the key columns and ok=0 of a row whose payload is bad."""
+    columns = [f.name for f in schema.fields]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield guard_rows(pdf.itertuples(index=False, name=None), derive, failed, columns)
+
+    return df.select(*fields).mapInPandas(run, schema=schema)
+
 
 IMAGE_FEATURES_SCHEMA = StructType(
     [
@@ -65,32 +83,22 @@ def image_features(df: DataFrame) -> DataFrame:
     Input columns: image_id, bytes, w, h, fmt. Streams Arrow batches;
     per-batch numpy vectorization, no per-row Python in the plan.
     """
-    fields = ["image_id", "bytes", "w", "h", "fmt"]
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("image_id", "w", "h", "phash", "mean_rgb", "std_gray", "decode_ok")}
-            for iid, data, w, h, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"]
-            ):
-                out["image_id"].append(iid)
-                out["w"].append(int(w))
-                out["h"].append(int(h))
-                try:
-                    px = decode_payload(bytes(data), int(w), int(h), fmt)
-                    gray = px.astype(np.float64) @ np.array([0.299, 0.587, 0.114])
-                    out["phash"].append(phash64(px))
-                    out["mean_rgb"].append([float(m) for m in px.mean(axis=(0, 1))])
-                    out["std_gray"].append(float(gray.std()))
-                    out["decode_ok"].append(1)
-                except (ValueError, NotImplementedError, TypeError):
-                    out["phash"].append(None)
-                    out["mean_rgb"].append(None)
-                    out["std_gray"].append(None)
-                    out["decode_ok"].append(0)
-            yield pd.DataFrame(out)
+    def derive(iid, data, w, h, fmt):
+        px = decode_payload(bytes(data), int(w), int(h), fmt)
+        gray = px.astype(np.float64) @ np.array([0.299, 0.587, 0.114])
+        return [{
+            "image_id": iid, "w": int(w), "h": int(h), "phash": phash64(px),
+            "mean_rgb": [float(m) for m in px.mean(axis=(0, 1))],
+            "std_gray": float(gray.std()), "decode_ok": 1,
+        }]
 
-    return df.select(*fields).mapInPandas(extract, schema=IMAGE_FEATURES_SCHEMA)
+    def failed(iid, data, w, h, fmt):
+        return {"image_id": iid, "w": int(w), "h": int(h), "decode_ok": 0}
+
+    return _map_guarded(
+        df, ["image_id", "bytes", "w", "h", "fmt"], IMAGE_FEATURES_SCHEMA, derive, failed
+    )
 
 
 RESIZE_SCHEMA = StructType(
@@ -105,27 +113,23 @@ RESIZE_SCHEMA = StructType(
 
 
 def resize_images(df: DataFrame, target_w: int, target_h: int) -> DataFrame:
-    """Nearest-neighbor resize of raw payloads (deterministic numpy);
-    non-raw formats would call a codec here -> stubbed."""
+    """Nearest-neighbor resize to raw RGB (deterministic numpy). Any
+    format decode_payload reads is accepted; a row whose payload does
+    not decode comes out with null bytes."""
 
-    def rz(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("image_id", "bytes", "w", "h", "fmt")}
-            for iid, data, w, h, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"]
-            ):
-                px = decode_payload(bytes(data), int(w), int(h), fmt)  # raw/png real; jpeg raises
-                ri = (np.arange(target_h) * int(h)) // target_h
-                ci = (np.arange(target_w) * int(w)) // target_w
-                small = px[np.ix_(ri, ci)]
-                rows["image_id"].append(iid)
-                rows["bytes"].append(small.tobytes())
-                rows["w"].append(target_w)
-                rows["h"].append(target_h)
-                rows["fmt"].append("raw")
-            yield pd.DataFrame(rows)
+    def derive(iid, data, w, h, fmt):
+        px = decode_payload(bytes(data), int(w), int(h), fmt)
+        ri = (np.arange(target_h) * int(h)) // target_h
+        ci = (np.arange(target_w) * int(w)) // target_w
+        return [{
+            "image_id": iid, "bytes": px[np.ix_(ri, ci)].tobytes(),
+            "w": target_w, "h": target_h, "fmt": "raw",
+        }]
 
-    return df.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(rz, schema=RESIZE_SCHEMA)
+    def failed(iid, *_):
+        return {"image_id": iid, "w": target_w, "h": target_h, "fmt": "raw"}
+
+    return _map_guarded(df, ["image_id", "bytes", "w", "h", "fmt"], RESIZE_SCHEMA, derive, failed)
 
 
 AUDIO_FEATURES_SCHEMA = StructType(
@@ -147,10 +151,9 @@ def decode_pcm(data: bytes, n_channels: int) -> np.ndarray:
     """Raw interleaved int16 PCM -> (n_samples, n_channels) array.
 
     'raw' PCM is the audio analog of the 'raw' RGB image format: fully
-    implementable with numpy alone, so the audio modality is REAL in
-    this environment (compressed codecs — mp3/ogg/flac — would slot in
-    here exactly like png/jpeg in decode_payload, and are stubbed for
-    the same no-codec-libs reason).
+    implementable with numpy alone. WAV and FLAC decode to the same
+    array (decode_wav, functions/flac.py); lossy mp3/ogg PCM stays
+    NotImplementedError.
     """
     arr = np.frombuffer(data, dtype="<i2")
     if n_channels <= 0 or arr.size % n_channels:
@@ -197,6 +200,8 @@ def decode_wav(data: bytes) -> tuple[np.ndarray, int]:
         if len(payload) != length:
             raise ValueError(f"truncated WAVE chunk {tag!r}")
         if tag == b"fmt ":
+            if length < 16:
+                raise ValueError(f"WAVE fmt chunk {length} bytes < 16")
             fmt_tag, n_ch, rate, _, _, bits = struct.unpack("<HHIIHH", payload[:16])
             if fmt_tag != 1 or bits != 16:
                 raise NotImplementedError(
@@ -219,65 +224,50 @@ def audio_features(df: DataFrame, fmt_col: str = "fmt") -> DataFrame:
     Arrow-batch shape as image_features — binary in, typed struct out,
     no per-row Python in the plan.
     """
-    fields = ["audio_id", "bytes", "sample_rate", "n_channels", fmt_col]
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "audio_id", "sample_rate", "n_channels", "n_samples",
-                "duration_s", "rms", "peak", "zcr", "decode_ok",
-            )}
-            for aid, data, rate, nch, fmt in zip(
-                pdf["audio_id"], pdf["bytes"], pdf["sample_rate"], pdf["n_channels"], pdf[fmt_col]
-            ):
-                out["audio_id"].append(aid)
-                out["sample_rate"].append(int(rate))
-                out["n_channels"].append(int(nch))
-                try:
-                    if fmt == "pcm16":
-                        pcm = decode_pcm(bytes(data), int(nch))
-                    elif fmt == "wav":
-                        pcm, wav_rate = decode_wav(bytes(data))
-                        if wav_rate != int(rate) or pcm.shape[1] != int(nch):
-                            raise ValueError(
-                                f"WAVE header ({wav_rate} Hz, {pcm.shape[1]} ch) "
-                                f"!= metadata ({int(rate)} Hz, {int(nch)} ch)"
-                            )
-                    elif fmt == "flac":
-                        # real lossless codec (functions/flac.py):
-                        # rice + fixed/LPC prediction, CRC-checked
-                        from crawler_spark.functions.flac import decode_flac
+    def derive(aid, data, rate, nch, fmt):
+        if fmt == "pcm16":
+            pcm = decode_pcm(bytes(data), int(nch))
+        elif fmt in ("wav", "flac"):
+            if fmt == "wav":
+                pcm, got_rate = decode_wav(bytes(data))
+            else:
+                # real lossless codec (functions/flac.py):
+                # rice + fixed/LPC prediction, CRC-checked
+                from crawler_spark.functions.flac import decode_flac
 
-                        pcm, fl_rate = decode_flac(bytes(data))
-                        if fl_rate != int(rate) or pcm.shape[1] != int(nch):
-                            raise ValueError(
-                                f"FLAC header ({fl_rate} Hz, {pcm.shape[1]} ch) "
-                                f"!= metadata ({int(rate)} Hz, {int(nch)} ch)"
-                            )
-                    else:
-                        raise NotImplementedError(
-                            f"audio codec {fmt!r} unavailable in this environment "
-                            "(pcm16/wav/flac implemented; lossy mp3/ogg need a "
-                            "codec library)"
-                        )
-                    mono = pcm.astype(np.float64).mean(axis=1)
-                    n = len(mono)
-                    signs = mono[1:] * mono[:-1]
-                    out["n_samples"].append(n)
-                    out["duration_s"].append(round(n / float(rate), 6))
-                    out["rms"].append(round(float(np.sqrt(np.mean(mono**2))), 6))
-                    out["peak"].append(int(np.max(np.abs(pcm))) if n else 0)
-                    out["zcr"].append(
-                        round(float((signs < 0).sum()) / (n - 1), 6) if n > 1 else 0.0
-                    )
-                    out["decode_ok"].append(1)
-                except (ValueError, NotImplementedError, TypeError):
-                    for k in ("n_samples", "duration_s", "rms", "peak", "zcr"):
-                        out[k].append(None)
-                    out["decode_ok"].append(0)
-            yield pd.DataFrame(out)
+                pcm, got_rate = decode_flac(bytes(data))
+            if got_rate != int(rate) or pcm.shape[1] != int(nch):
+                raise ValueError(
+                    f"{fmt} header ({got_rate} Hz, {pcm.shape[1]} ch) "
+                    f"!= metadata ({int(rate)} Hz, {int(nch)} ch)"
+                )
+        else:
+            raise NotImplementedError(
+                f"audio codec {fmt!r} unavailable in this environment "
+                "(pcm16/wav/flac implemented; lossy mp3/ogg need a "
+                "codec library)"
+            )
+        mono = pcm.astype(np.float64).mean(axis=1)
+        n = len(mono)
+        signs = mono[1:] * mono[:-1]
+        return [{
+            "audio_id": aid, "sample_rate": int(rate), "n_channels": int(nch),
+            "n_samples": n,
+            "duration_s": round(n / float(rate), 6),
+            "rms": round(float(np.sqrt(np.mean(mono**2))), 6),
+            "peak": int(np.max(np.abs(pcm))) if n else 0,
+            "zcr": round(float((signs < 0).sum()) / (n - 1), 6) if n > 1 else 0.0,
+            "decode_ok": 1,
+        }]
 
-    return df.select(*fields).mapInPandas(extract, schema=AUDIO_FEATURES_SCHEMA)
+    def failed(aid, data, rate, nch, fmt):
+        return {"audio_id": aid, "sample_rate": int(rate), "n_channels": int(nch), "decode_ok": 0}
+
+    return _map_guarded(
+        df, ["audio_id", "bytes", "sample_rate", "n_channels", fmt_col],
+        AUDIO_FEATURES_SCHEMA, derive, failed,
+    )
 
 
 AUDIO_STREAM_META_SCHEMA = StructType(
@@ -310,83 +300,57 @@ def audio_stream_metadata(df: DataFrame, fmt_col: str = "fmt") -> DataFrame:
     Row-level failures -> parse_ok=0, never task failures. n_frames is
     mp3-only (frame-based container); wav/flac report null.
     """
-    fields = ["audio_id", "bytes", fmt_col]
+    from crawler_spark.functions.mpeg_audio import parse_mp3
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
+    def derive(aid, data, fmt):
+        row = {"audio_id": aid, "parse_ok": 1}
+        data = bytes(data)
+        if fmt == "mp3":
+            m = parse_mp3(data)
+            row.update(
+                container=f"{m['version']}-layer{m['layer']}",
+                sample_rate=m["sample_rate"],
+                channels=m["channels"],
+                n_frames=m["n_frames"],
+                duration_s=m["duration_s"],
+                vbr=int(m["vbr"]),
+                bitrate_kbps=m["bitrate_kbps"],
+                total_frame_bytes=m["total_frame_bytes"],
+            )
+        elif fmt == "wav":
+            pcm, rate = decode_wav(data)
+            row.update(
+                container="riff-wave",
+                sample_rate=rate,
+                channels=pcm.shape[1],
+                duration_s=round(len(pcm) / rate, 6),
+                vbr=0,
+                bitrate_kbps=rate * pcm.shape[1] * 16 // 1000,
+                total_frame_bytes=pcm.nbytes,
+            )
+        elif fmt == "flac":
+            if data[:4] != b"fLaC":
+                raise ValueError("not a flac stream")
+            # STREAMINFO: first metadata block, packed u64 at 18
+            packed = int.from_bytes(data[18:26], "big")
+            rate = packed >> 44
+            n_ch = ((packed >> 41) & 7) + 1
+            total = packed & ((1 << 36) - 1)
+            row.update(
+                container="flac",
+                sample_rate=rate,
+                channels=n_ch,
+                duration_s=round(total / rate, 6) if total else None,
+                vbr=1,  # flac frames are inherently variable-size
+            )
+        else:
+            raise NotImplementedError(f"no metadata parser for {fmt!r}")
+        return [row]
 
-        from crawler_spark.functions.mpeg_audio import parse_mp3
+    def failed(aid, data, fmt):
+        return {"audio_id": aid, "parse_ok": 0}
 
-        def one(aid, data, fmt) -> dict:
-            row = {k: None for k in (
-                "container", "sample_rate", "channels", "n_frames",
-                "duration_s", "vbr", "bitrate_kbps", "total_frame_bytes",
-            )}
-            row["audio_id"] = aid
-            data = bytes(data)
-            if fmt == "mp3":
-                m = parse_mp3(data)
-                row.update(
-                    container=f"{m['version']}-layer{m['layer']}",
-                    sample_rate=m["sample_rate"],
-                    channels=m["channels"],
-                    n_frames=m["n_frames"],
-                    duration_s=m["duration_s"],
-                    vbr=int(m["vbr"]),
-                    bitrate_kbps=m["bitrate_kbps"],
-                    total_frame_bytes=m["total_frame_bytes"],
-                )
-            elif fmt == "wav":
-                pcm, rate = decode_wav(data)
-                row.update(
-                    container="riff-wave",
-                    sample_rate=rate,
-                    channels=pcm.shape[1],
-                    duration_s=round(len(pcm) / rate, 6),
-                    vbr=0,
-                    bitrate_kbps=rate * pcm.shape[1] * 16 // 1000,
-                    total_frame_bytes=pcm.nbytes,
-                )
-            elif fmt == "flac":
-                if data[:4] != b"fLaC":
-                    raise ValueError("not a flac stream")
-                # STREAMINFO: first metadata block, packed u64 at 18
-                packed = int.from_bytes(data[18:26], "big")
-                rate = packed >> 44
-                n_ch = ((packed >> 41) & 7) + 1
-                total = packed & ((1 << 36) - 1)
-                row.update(
-                    container="flac",
-                    sample_rate=rate,
-                    channels=n_ch,
-                    duration_s=round(total / rate, 6) if total else None,
-                    vbr=1,  # flac frames are inherently variable-size
-                )
-            else:
-                raise NotImplementedError(f"no metadata parser for {fmt!r}")
-            row["parse_ok"] = 1
-            return row
-
-        for pdf in batches:
-            rows = []
-            for aid, data, fmt in zip(pdf["audio_id"], pdf["bytes"], pdf[fmt_col]):
-                try:
-                    rows.append(one(aid, data, fmt))
-                except (ValueError, NotImplementedError, TypeError, _struct.error):
-                    rows.append(
-                        {
-                            "audio_id": aid,
-                            **{k: None for k in (
-                                "container", "sample_rate", "channels",
-                                "n_frames", "duration_s", "vbr",
-                                "bitrate_kbps", "total_frame_bytes",
-                            )},
-                            "parse_ok": 0,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in AUDIO_STREAM_META_SCHEMA])
-
-    return df.select(*fields).mapInPandas(extract, schema=AUDIO_STREAM_META_SCHEMA)
+    return _map_guarded(df, ["audio_id", "bytes", fmt_col], AUDIO_STREAM_META_SCHEMA, derive, failed)
 
 
 def synth_pcm(audio_id: str, n_samples: int = 800) -> bytes:
@@ -427,50 +391,29 @@ def image_stream_metadata(df: DataFrame) -> DataFrame:
     the image analog of audio_stream_metadata's MP3 walk. Input
     (image_id, bytes); malformed payloads land as parse_ok=0 rows.
     """
-    import struct as _struct
-
     from crawler_spark.functions.image_meta import image_meta
 
-    cols = [f.name for f in IMAGE_STREAM_META_SCHEMA]
+    def derive(iid, data):
+        m = image_meta(bytes(data))
+        exif = m.get("exif") or {}
+        return [{
+            "image_id": iid,
+            "fmt_detected": m["fmt"],
+            "w": m.get("w"),
+            "h": m.get("h"),
+            "n_frames": m.get("n_frames"),
+            "bit_depth": m.get("bit_depth"),
+            "progressive": int(m["progressive"]) if "progressive" in m else None,
+            "interlaced": int(m["interlaced"]) if "interlaced" in m else None,
+            "exif_orientation": exif.get("orientation"),
+            "exif_make": exif.get("make"),
+            "parse_ok": 1,
+        }]
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def one(iid, data) -> dict:
-            m = image_meta(bytes(data))
-            exif = m.get("exif") or {}
-            return {
-                "image_id": iid,
-                "fmt_detected": m["fmt"],
-                "w": m.get("w"),
-                "h": m.get("h"),
-                "n_frames": m.get("n_frames"),
-                "bit_depth": m.get("bit_depth"),
-                "progressive": (
-                    int(m["progressive"]) if "progressive" in m else None
-                ),
-                "interlaced": int(m["interlaced"]) if "interlaced" in m else None,
-                "exif_orientation": exif.get("orientation"),
-                "exif_make": exif.get("make"),
-                "parse_ok": 1,
-            }
+    def failed(iid, data):
+        return {"image_id": iid, "parse_ok": 0}
 
-        for pdf in batches:
-            rows = []
-            for iid, data in zip(pdf["image_id"], pdf["bytes"]):
-                try:
-                    rows.append(one(iid, data))
-                except (ValueError, TypeError, _struct.error):
-                    rows.append(
-                        {
-                            "image_id": iid,
-                            **{k: None for k in cols[1:-1]},
-                            "parse_ok": 0,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select("image_id", "bytes").mapInPandas(
-        extract, schema=IMAGE_STREAM_META_SCHEMA
-    )
+    return _map_guarded(df, ["image_id", "bytes"], IMAGE_STREAM_META_SCHEMA, derive, failed)
 
 
 VIDEO_FRAMES_SCHEMA = StructType(
@@ -510,72 +453,37 @@ def frame_sample(df: DataFrame, every_n: int = 30, fmt_col: str = "fmt") -> Data
     from crawler_spark.functions.gif import gif_frame_meta, sample_gif_frames
     from crawler_spark.functions.video import decode_video_frame, parse_avi_mjpeg
 
-    fields = ["video_id", "bytes", "fps", "n_frames", fmt_col]
+    def derive(vid, data, fps, n_frames, fmt):
+        data = bytes(data)
+        if fmt == "gif":
+            meta = gif_frame_meta(data)  # no entropy work
+            eff_fps = float(fps)
+        elif fmt == "avi":
+            meta = parse_avi_mjpeg(data)
+            eff_fps = meta["fps"] or float(fps)
+        else:
+            raise NotImplementedError(
+                f"video codec {fmt!r} unavailable in this environment "
+                "(avi/MJPG and animated gif are the implemented containers)"
+            )
+        if int(n_frames) != meta["n_frames"]:
+            raise ValueError(
+                f"metadata n_frames {int(n_frames)} != container {meta['n_frames']}"
+            )
+        wanted = range(0, meta["n_frames"], every_n)
+        if fmt == "gif":
+            frames = sample_gif_frames(data, list(wanted))
+        else:
+            frames = (decode_video_frame(meta, idx) for idx in wanted)
+        for idx, px in zip(wanted, frames):
+            yield {
+                "video_id": vid, "frame_idx": idx, "t_s": round(idx / eff_fps, 6),
+                "w": meta["w"], "h": meta["h"], "phash": phash64(px), "decode_ok": 1,
+            }
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "video_id", "frame_idx", "t_s", "w", "h", "phash", "decode_ok",
-            )}
-            for vid, data, fps, n_frames, fmt in zip(
-                pdf["video_id"], pdf["bytes"], pdf["fps"], pdf["n_frames"], pdf[fmt_col]
-            ):
-                try:
-                    if fmt == "gif":
-                        gmeta = gif_frame_meta(bytes(data))  # no entropy work
-                        if int(n_frames) != gmeta["n_frames"]:
-                            raise ValueError(
-                                f"metadata n_frames {int(n_frames)} != "
-                                f"container {gmeta['n_frames']}"
-                            )
-                        wanted = list(range(0, gmeta["n_frames"], every_n))
-                        for idx, px in zip(
-                            wanted, sample_gif_frames(bytes(data), wanted)
-                        ):
-                            out["video_id"].append(vid)
-                            out["frame_idx"].append(idx)
-                            out["t_s"].append(round(idx / float(fps), 6))
-                            out["w"].append(gmeta["w"])
-                            out["h"].append(gmeta["h"])
-                            out["phash"].append(phash64(px))
-                            out["decode_ok"].append(1)
-                        continue
-                    if fmt != "avi":
-                        raise NotImplementedError(
-                            f"video codec {fmt!r} unavailable in this environment "
-                            "(avi/MJPG and animated gif are the implemented containers)"
-                        )
-                    meta = parse_avi_mjpeg(bytes(data))
-                    if int(n_frames) != meta["n_frames"]:
-                        raise ValueError(
-                            f"metadata n_frames {int(n_frames)} != "
-                            f"container {meta['n_frames']}"
-                        )
-                    eff_fps = meta["fps"] or float(fps)
-                    for idx in range(0, meta["n_frames"], every_n):
-                        px = decode_video_frame(meta, idx)
-                        out["video_id"].append(vid)
-                        out["frame_idx"].append(idx)
-                        out["t_s"].append(round(idx / eff_fps, 6))
-                        out["w"].append(meta["w"])
-                        out["h"].append(meta["h"])
-                        out["phash"].append(phash64(px))
-                        out["decode_ok"].append(1)
-                except (ValueError, NotImplementedError, TypeError, KeyError):
-                    out["video_id"].append(vid)
-                    for k in ("frame_idx", "t_s", "w", "h", "phash"):
-                        out[k].append(None)
-                    out["decode_ok"].append(0)
-            yield pd.DataFrame(out)
+    def failed(vid, *_):
+        return {"video_id": vid, "decode_ok": 0}
 
-    return df.select(*fields).mapInPandas(extract, schema=VIDEO_FRAMES_SCHEMA)
-
-
-def frame_sample_stub(df: DataFrame, every_n: int = 30) -> DataFrame:
-    """Kept for API compatibility: the stub graduated to frame_sample
-    (real AVI/MJPEG path) in round 4; non-AVI formats still raise."""
-    raise NotImplementedError(
-        "frame_sample_stub graduated: use frame_sample (real for "
-        "fmt='avi' — MJPEG frames via functions/video.py); inter-frame "
-        "codecs (h264/vp9/av1) remain unavailable in this environment"
+    return _map_guarded(
+        df, ["video_id", "bytes", "fps", "n_frames", fmt_col], VIDEO_FRAMES_SCHEMA, derive, failed
     )

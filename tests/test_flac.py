@@ -183,3 +183,21 @@ def test_decode_handbuilt_mid_side_and_constant():
     dec, _ = decode_flac(data)
     assert dec[:, 0].tolist() == left
     assert dec[:, 1].tolist() == right
+
+
+def test_truncated_frame_and_channel_mismatch_are_value_error():
+    """A frame header or CRC-16 cut short, and a frame with more
+    channels than STREAMINFO, used to escape as IndexError or
+    struct.error."""
+    pcm = np.arange(-500, 500, dtype=np.int16)
+    enc = encode_flac(pcm, 4000)
+    first_frame = 4 + 4 + 34  # magic, STREAMINFO block header and body
+    assert enc[first_frame] == 0xFF
+    for cut in (first_frame + 4, len(enc) - 1):
+        with pytest.raises(ValueError, match="truncated"):
+            decode_flac(enc[:cut])
+    stereo = bytearray(encode_flac(np.stack([pcm, pcm], axis=1), 4000))
+    packed = int.from_bytes(stereo[18:26], "big") & ~(7 << 41)  # STREAMINFO: mono
+    stereo[18:26] = packed.to_bytes(8, "big")
+    with pytest.raises(ValueError, match="channels"):
+        decode_flac(bytes(stereo))

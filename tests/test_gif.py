@@ -248,3 +248,23 @@ def test_gradient_pixels_roundtrip_all_seeds():
         w = 24 + (s % 3) * 8
         px = quantize_332(pixels_gradient(f"img_{s}", w, 32))
         assert np.array_equal(decode_gif(encode_gif(px, interlace=s % 2 == 1)), px)
+
+
+def test_huge_logical_screen_fails_before_allocating_a_canvas():
+    """The canvas is the logical screen: 65535 x 65535 is 12 GiB of
+    RGB. A frame whose LZW data comes up short fails before any canvas
+    exists, and a screen over image_meta.MAX_PIXELS is refused."""
+    import tracemalloc
+
+    short = [(0, 0, 4, 4, [0] * 8, 1, -1, None)]  # 8 of the frame's 16 pixels
+    whole = [(0, 0, 4, 4, [0] * 16, 1, -1, None)]
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError, match="lzw"):
+            decode_gif(_hand_gif(short, w=6000, h=6000))
+        assert tracemalloc.get_traced_memory()[1] < 16 << 20
+        with pytest.raises(ValueError, match="cap"):
+            decode_gif(_hand_gif(whole, w=65535, h=65535))
+        assert tracemalloc.get_traced_memory()[1] < 16 << 20
+    finally:
+        tracemalloc.stop()

@@ -282,3 +282,75 @@ def test_corrupt_entropy_does_not_hang_or_segfault():
             decode_jpeg(bytes(c))  # wrong pixels are fine; crashes are not
         except (ValueError, NotImplementedError):
             pass
+
+
+# --------------------------------------------- malformed header fields
+# Each of these escaped the decoder as a non-ValueError (IndexError,
+# KeyError, OverflowError), which no payload row guard is there to see.
+
+
+def _baseline():
+    return bytearray(encode_jpeg(pixels_for("t_bad", 32, 32), quality=90))
+
+
+def test_dht_counts_beyond_its_values_are_value_error():
+    data = _baseline()
+    dht = data.find(b"\xff\xc4")
+    data[dht + 5 + 15] += 1  # one more 16-bit code than the segment has values
+    with pytest.raises(ValueError, match="DHT"):
+        decode_jpeg(bytes(data))
+
+
+def test_scan_component_missing_from_frame_is_value_error():
+    data = _baseline()
+    data[data.find(b"\xff\xda") + 5] = 9  # first scan component: id 9, not in SOF
+    with pytest.raises(ValueError, match="component"):
+        decode_jpeg(bytes(data))
+
+
+def test_undefined_quant_table_is_value_error():
+    data = _baseline()
+    data[data.find(b"\xff\xc0") + 12] = 3  # first component's Tq: table 3, never defined
+    with pytest.raises(ValueError, match="quant"):
+        decode_jpeg(bytes(data))
+
+
+def test_dc_magnitude_category_over_11_is_value_error():
+    data = _baseline()
+    dht = data.find(b"\xff\xc4")  # the luma DC table: 12 values after 16 counts
+    data[dht + 21 : dht + 33] = bytes([200] * 12)
+    with pytest.raises(ValueError, match="DC magnitude"):
+        decode_jpeg(bytes(data))
+
+
+@pytest.mark.parametrize("field", ["component", "band_end"])
+def test_progressive_scan_header_out_of_range_is_value_error(field):
+    data = bytearray(
+        encode_jpeg(pixels_for("t_bad", 32, 32), quality=90, progressive=True)
+    )
+    sos = -1
+    for _ in range(3):  # the third scan: luma AC band 6..63
+        sos = data.find(b"\xff\xda", sos + 1)
+    assert data[sos + 4] == 1 and data[sos + 7 : sos + 9] == bytes([6, 63])
+    if field == "component":
+        data[sos + 5] = 9
+    else:
+        data[sos + 8] = 80  # Se past the 64-coefficient block
+    with pytest.raises(ValueError):
+        decode_jpeg(bytes(data))
+
+
+@pytest.mark.parametrize("w,h", [(8192, 24), (2048, 1536)])
+def test_claimed_frame_size_does_not_drive_decode_time(w, h):
+    """A frame header patched to claim more pixels than the stream
+    codes is rejected promptly: past its last coded bit the bit reader
+    used to feed zeros, "decoding" blocks up to the claimed size."""
+    import time
+
+    data = _baseline()
+    sof = data.find(b"\xff\xc0")
+    data[sof + 5 : sof + 9] = struct.pack(">HH", h, w)
+    t0 = time.perf_counter()
+    with pytest.raises(ValueError):
+        decode_jpeg(bytes(data))
+    assert time.perf_counter() - t0 < 2.0

@@ -17,7 +17,7 @@ def images(spark):
         w, h = (32, 64) if i % 2 else (64, 32)
         rows.append((iid, encode_payload(pixels_for(iid, w, h)), w, h, "raw"))
     rows.append(("img_broken", b"\x00\x01", 32, 32, "raw"))  # bad size
-    rows.append(("img_png", b"\x89PNG", 32, 32, "png"))  # stubbed codec
+    rows.append(("img_png", b"\x89PNG", 32, 32, "png"))  # truncated png
     return spark.createDataFrame(
         pd.DataFrame(rows, columns=["image_id", "bytes", "w", "h", "fmt"])
     )
@@ -32,7 +32,7 @@ def test_image_features(images):
     assert len(ok["mean_rgb"]) == 3 and all(0 <= m <= 255 for m in ok["mean_rgb"])
     # failures degrade gracefully, not crash the batch
     assert out["img_broken"]["decode_ok"] == 0 and out["img_broken"]["phash"] is None
-    assert out["img_png"]["decode_ok"] == 0  # codec stub -> NotImplementedError caught
+    assert out["img_png"]["decode_ok"] == 0  # truncated png -> ValueError caught
 
 
 def test_resize_images(images):
@@ -45,11 +45,6 @@ def test_resize_images(images):
     # deterministic: resize twice -> identical bytes
     out2 = {r["image_id"]: r for r in mm.resize_images(good, 16, 16).collect()}
     assert all(bytes(out[i]["bytes"]) == bytes(out2[i]["bytes"]) for i in out)
-
-
-def test_frame_sample_is_explicit_stub(images):
-    with pytest.raises(NotImplementedError):
-        mm.frame_sample_stub(images)
 
 
 def test_audio_features_pcm(spark):
@@ -253,3 +248,50 @@ def test_audio_features_flac_equals_pcm(spark):
     assert out["flac_s"]["n_samples"] == 4000
     for bad in ("flac_badrate", "flac_corrupt", "mp3_stub"):
         assert out[bad]["decode_ok"] == 0, bad
+
+
+def test_wav_short_fmt_chunk_is_value_error():
+    import struct
+
+    short_fmt = b"RIFF" + struct.pack("<I", 16) + b"WAVE" + b"fmt " + struct.pack("<I", 4) + b"\x01\x00\x01\x00"
+    with pytest.raises(ValueError, match="fmt"):
+        mm.decode_wav(short_fmt)
+
+
+def test_frame_sample_failure_replaces_the_whole_video(spark):
+    """A row's output is all or nothing: when the second of three
+    frames fails to decode, the video yields one decode_ok=0 row, not
+    frame 0 plus a failure row."""
+    from crawler_spark.functions.video import encode_avi_mjpeg
+
+    clip = bytearray(
+        encode_avi_mjpeg([pixels_for(f"v_f{i}", 16, 16) for i in range(3)], fps=12, quality=90)
+    )
+    second = clip.find(b"\xff\xd8", clip.find(b"\xff\xd8") + 2)
+    clip[second : second + 2] = b"\x00\x00"  # frame 1's SOI
+    df = spark.createDataFrame(
+        pd.DataFrame(
+            [("v_ok", bytes(encode_avi_mjpeg([pixels_for("v_g", 16, 16)], fps=12)), 12.0, 1, "avi"),
+             ("v_bad", bytes(clip), 12.0, 3, "avi")],
+            columns=["video_id", "bytes", "fps", "n_frames", "fmt"],
+        )
+    )
+    rows = mm.frame_sample(df, every_n=1).collect()
+    bad = [r.asDict() for r in rows if r["video_id"] == "v_bad"]
+    assert bad == [
+        {"video_id": "v_bad", "frame_idx": None, "t_s": None, "w": None, "h": None,
+         "phash": None, "decode_ok": 0}
+    ]
+    assert [r["decode_ok"] for r in rows if r["video_id"] == "v_ok"] == [1]
+
+
+def test_resize_images_undecodable_row_yields_null_bytes(images):
+    """A payload that does not decode gives a row with null bytes; the
+    job does not fail (it used to raise 'not a PNG')."""
+    out = {r["image_id"]: r for r in mm.resize_images(images, 16, 16).collect()}
+    assert len(out) == 8
+    for iid in ("img_broken", "img_png"):
+        assert out[iid]["bytes"] is None
+        assert (out[iid]["w"], out[iid]["h"], out[iid]["fmt"]) == (16, 16, "raw")
+    good = decode_payload(bytes(out["img_00000001"]["bytes"]), 16, 16)
+    assert good.shape == (16, 16, 3)

@@ -8,11 +8,10 @@ from pyspark.sql import functions as F
 from crawler_spark.functions.payload import (
     decode_payload,
     encode_payload,
-    parse_payload,
+    make_fetch_parse_udf,
     phash64,
     pixels_for,
     psnr,
-    synth_fetch_bytes,
 )
 
 
@@ -101,6 +100,25 @@ def test_png_rejects_corruption_and_bad_dims():
         decode_payload(b"\x89PNGnope" + b"\x00" * 40, 16, 16, "png")
 
 
+def test_png_corrupt_deflate_with_valid_crc_is_value_error():
+    """The CRC covers the chunk, not what it inflates to: a bad zlib
+    stream under a matching CRC is a ValueError, not zlib.error."""
+    import struct
+    import zlib as _zlib
+
+    from crawler_spark.functions.payload import decode_png, encode_png
+
+    good = encode_png(pixels_for("img_deflate", 16, 16))
+    at = good.find(b"IDAT")
+    (n,) = struct.unpack(">I", good[at - 4 : at])
+    body = bytearray(good[at + 4 : at + 4 + n])
+    body[0] ^= 0xFF  # zlib header
+    crc = struct.pack(">I", _zlib.crc32(b"IDAT" + body) & 0xFFFFFFFF)
+    bad = good[: at + 4] + bytes(body) + crc + good[at + 8 + n :]
+    with pytest.raises(ValueError, match="IDAT"):
+        decode_png(bad)
+
+
 def test_phash_deterministic_and_discriminative():
     a = phash64(pixels_for("img_1", 64, 64))
     assert a == phash64(pixels_for("img_1", 64, 64))
@@ -135,14 +153,15 @@ def test_fetch_and_parse_udfs(spark):
         }
     )
     df = spark.createDataFrame(pdf)
+    fetch_parse = make_fetch_parse_udf(store_bytes=True, validate=True)
     out = (
-        df.withColumn("bytes", synth_fetch_bytes("image_id", "w", "h", "fmt"))
-        .withColumn("parsed", parse_payload("bytes", "w", "h", "fmt", "image_id"))
+        df.withColumn("parsed", fetch_parse("image_id", "w", "h", "fmt"))
         .select("image_id", "w", "h", "parsed.*")
         .collect()
     )
     for r in out:
         assert r["decode_ok"] is True
+        assert bytes(r["bytes"]) == encode_payload(pixels_for(r["image_id"], r["w"], r["h"]))
         assert r["psnr_db"] >= 40.0  # lossless raw -> sentinel 99.0
         local = phash64(pixels_for(r["image_id"], r["w"], r["h"]))
         assert r["phash"] == local
@@ -310,3 +329,60 @@ def test_fetch_fn_failure_routes_like_decode_failure(spark):
     got = {r["image_id"]: r["decode_ok"] for r in rows}
     assert got == {f"img_{i}": (i != 3) for i in range(6)}
     assert all(r["psnr_db"] >= 99.0 for r in rows if r["decode_ok"])
+
+
+def test_engine_drains_and_keeps_bytes_of_bodies_that_do_not_decode(spark, tmp_path_factory):
+    """Real-web bodies can be malformed. A fetcher serving corrupt
+    JPEGs (a DHT segment counting more codes than it holds values, which
+    escaped the decoder as IndexError and failed the round) must not
+    stop the crawl: those pages are stored with exactly the fetched
+    bytes and a null phash, and the rest of their batch keeps exact
+    phashes (a null used to turn the batch's phash column into float64)."""
+    import zlib as _zlib
+
+    from crawler_spark.operators.frontier import CrawlEngine
+    from crawler_spark.sources.synth import corpus_to_spark, gen_corpus
+    from crawler_spark.storage import SnapshotCatalog
+
+    def corrupt(image_id, w, h):
+        body = bytearray(encode_payload(pixels_for(image_id, w, h), "jpeg"))
+        body[body.find(b"\xff\xc4") + 20] += 1
+        return bytes(body)
+
+    def is_bad(image_id, fmt):
+        return fmt == "jpeg" and _zlib.crc32(image_id.encode()) % 3 == 0
+
+    def fetch(image_id, w, h, fmt):
+        if is_bad(image_id, fmt):
+            return corrupt(image_id, w, h)
+        return encode_payload(pixels_for(image_id, w, h), fmt)
+
+    pdfs = gen_corpus(n_pages=80, n_hosts=2, urlset_size=40, fault_frac=0.0, jpeg_frac=0.5)
+    corpus = corpus_to_spark(spark, pdfs)
+    eng = CrawlEngine(
+        spark,
+        SnapshotCatalog(spark, str(tmp_path_factory.mktemp("corrupt_wh"))),
+        seed_pages=corpus["seed_pages"],
+        sitemap_entries=corpus["sitemap_entries"],
+        robots_rules=corpus["robots_rules"],
+        keywords=corpus["keywords"],
+        round_duration=3600.0,
+        fetch_fn=fetch,
+    )
+    eng.bootstrap()
+    eng.run(max_rounds=10)
+    assert eng.pending_count() == 0
+    stored = eng.pages().select("image_id", "fmt", "w", "h", "bytes", "phash").collect()
+    assert len(stored) == 80
+    bad = [r for r in stored if is_bad(r["image_id"], r["fmt"])]
+    assert len(bad) >= 5
+    for r in stored:
+        w, h = int(r["w"]), int(r["h"])
+        if is_bad(r["image_id"], r["fmt"]):
+            assert bytes(r["bytes"]) == corrupt(r["image_id"], w, h), r["image_id"]
+            assert r["phash"] is None, r["image_id"]
+        elif r["fmt"] == "raw":
+            assert r["phash"] == phash64(pixels_for(r["image_id"], w, h)), r["image_id"]
+        else:
+            gt = phash64(pixels_for(r["image_id"], w, h))
+            assert bin(r["phash"] ^ gt).count("1") <= 4, r["image_id"]
